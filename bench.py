@@ -23,7 +23,8 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
 from training_feed_kinesis_spark.registry import load_all  # noqa: E402
 from training_feed_kinesis_spark.session import build_session  # noqa: E402
@@ -87,6 +88,35 @@ TIER2 = [
 ]
 
 
+def _load_prev_recording(sf: float | None, cpus: int, root: str = _ROOT) -> dict:
+    """The newest BENCH_r*.json recording taken at this sf on this core
+    count, or {}. Only comparable recordings count: one taken at a
+    different sf or core count (BENCH_r13_c8 is lexically newest but ran
+    on 8 cores) would mark queries ">15% regressed" (or make the guard
+    silently vacuous) and burn the retry budget. The driver wraps our JSON
+    line under "parsed", but a recording can carry parsed: null with only
+    a START-TRUNCATED tail string (observed BENCH_r10), so unparseable
+    files are skipped."""
+    benches = sorted(
+        glob.glob(os.path.join(root, "BENCH_r*.json")), reverse=True
+    )
+    for path in benches:
+        try:
+            with open(path) as f:
+                doc = json.load(f)
+            parsed = doc.get("parsed") or doc
+            if (
+                isinstance(parsed, dict)
+                and doc.get("cpus", parsed.get("cpus")) == cpus
+                and parsed.get("sf") == sf
+                and parsed.get("queries")
+            ):
+                return parsed
+        except (OSError, ValueError, AttributeError):
+            continue
+    return {}
+
+
 def _consume(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -97,6 +127,7 @@ def main() -> None:
     sf = float(m.group(1).rstrip(".")) if m else None
 
     spark = build_session("tfk-bench")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))  # as build_session
     registry = load_all()
 
     # warmup (machinery only, never data): drain one trivial stream at the
@@ -151,32 +182,7 @@ def main() -> None:
     # TFK_BENCH_RETRIES extra attempts — a true plan regression survives
     # the retries; a load burst does not. The retried keys and the host
     # loadavg are recorded so a round-over-round reader can tell which.
-    # the driver wraps our JSON line under "parsed" — but a recording can
-    # carry parsed: null with only a START-TRUNCATED tail string (observed
-    # BENCH_r10: unparseable), which made both retry guards silently
-    # inert. Walk back to the NEWEST recording that actually parses and
-    # matches this sf; only comparable recordings count — a prior round
-    # taken at a different sf would mark every query ">15% regressed" (or
-    # make the guard silently vacuous) and burn the retry budget.
-    def _load_prev_recording() -> dict:
-        benches = sorted(glob.glob(os.path.join(os.path.dirname(
-            os.path.abspath(__file__)), "BENCH_r*.json")), reverse=True)
-        for path in benches:
-            try:
-                with open(path) as f:
-                    doc = json.load(f)
-                parsed = doc.get("parsed") or doc
-                if (
-                    isinstance(parsed, dict)
-                    and parsed.get("sf") == sf
-                    and parsed.get("queries")
-                ):
-                    return parsed
-            except (OSError, ValueError, AttributeError):
-                continue
-        return {}
-
-    _prev_rec = _load_prev_recording()
+    _prev_rec = _load_prev_recording(sf, cpus)
     prev: dict[str, float] = _prev_rec.get("queries", {}) or {}
     retried: dict[str, int] = {}
     n_retries = int(os.environ.get("TFK_BENCH_RETRIES", "3"))
@@ -229,6 +235,12 @@ def main() -> None:
                 "tier2": tier2,
                 "tier2_cold": tier2_cold,
                 "sf": sf,
+                "cpus": cpus,
+                "master": spark.sparkContext.master,
+                "defaultParallelism": spark.sparkContext.defaultParallelism,
+                "spark.sql.shuffle.partitions": spark.conf.get(
+                    "spark.sql.shuffle.partitions"
+                ),
                 "runs_per_query": n_runs,
                 "estimator": "per-query min",
                 "retried": retried,

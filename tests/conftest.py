@@ -7,11 +7,12 @@ from __future__ import annotations
 
 import math
 import os
+import sys
 
 import duckdb
 import pytest
 
-from training_feed_kinesis_spark.session import build_session
+from training_feed_kinesis_spark.session import build_session, scoped_conf
 from training_feed_kinesis_spark.tables import TABLES
 
 SF_DIR = os.environ.get("TFK_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -23,6 +24,14 @@ def spark():
     s = build_session("tfk-tests")
     yield s
     s.stop()
+
+
+def scopes_confs(spec) -> bool:
+    """Whether ``spec``'s module can change a session conf: every conf
+    change in the package goes through ``session.scoped_conf``
+    (tests/test_session_conf.py lints this)."""
+    module = sys.modules[spec.fn.__module__]
+    return vars(module).get("scoped_conf") is scoped_conf
 
 
 @pytest.fixture(scope="session")
@@ -45,23 +54,13 @@ def registry_frames(spark):
     from training_feed_kinesis_spark.registry import load_all
 
     # Session confs are GLOBAL, not thread-local: an operator that flips
-    # a planning-relevant conf inside its fn (useV1SourceList /
-    # aggregatePushDown, CBO, partitionOverwriteMode, scripting,
-    # ignoreCorruptFiles) can poison ANOTHER thread's concurrent plan
-    # analysis (observed: scan_metadata_cols failing to resolve
-    # `_metadata` while ops_wave17 had the session on the V2 reader).
-    # Keys defined in conf-mutating modules build SERIALLY, after the
-    # pool. (drain()'s shuffle.partitions toggle stays in the pool: the
-    # partition count is never analysis- or result-relevant.)
-    _pkg = "training_feed_kinesis_spark.operators."
-    conf_mutators = {
-        _pkg + m
-        for m in (
-            "ops_wave17", "ops_wave28", "ops_wave80",
-            "engine_surface", "engine_surface2", "surface_wave7",
-        )
-    }
-
+    # a planning-relevant conf inside its fn can poison ANOTHER thread's
+    # concurrent plan analysis (observed: scan_metadata_cols failing to
+    # resolve `_metadata` while scan_agg_pushdown had the session on the
+    # V2 reader). Keys that may change a conf (scopes_confs) build
+    # SERIALLY, after the pool. drain() keeps its keys in the pool: its
+    # scope covers only query start, and the partition count is never
+    # result-relevant.
     def build(item):
         key, spec = item
         try:
@@ -72,8 +71,8 @@ def registry_frames(spark):
             return key, None, e
 
     items = sorted(load_all().items())
-    pooled = [i for i in items if i[1].fn.__module__ not in conf_mutators]
-    serial = [i for i in items if i[1].fn.__module__ in conf_mutators]
+    pooled = [i for i in items if not scopes_confs(i[1])]
+    serial = [i for i in items if scopes_confs(i[1])]
     frames = {}
     with ThreadPoolExecutor(max_workers=8) as pool:
         for key, df, err in pool.map(build, pooled):

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import pytest
 
+from training_feed_kinesis_spark.session import scoped_conf
+
 from .conftest import SF_DIR
 
 
@@ -145,7 +147,11 @@ def test_rocksdb_state_store_matches_default(spark, registry):
     spills off-heap/disk instead of living in executor heap, which is what
     makes 100 TB streaming state survivable). Provider choice is pure conf:
     no operator code changes."""
-    from training_feed_kinesis_spark.streaming.replay import drain, replay_stream
+    from training_feed_kinesis_spark.streaming.replay import (
+        ROCKSDB_PROVIDER,
+        drain,
+        replay_stream,
+    )
     from pyspark.sql import functions as F
 
     def tumbling():
@@ -159,21 +165,11 @@ def test_rocksdb_state_store_matches_default(spark, registry):
     baseline = _rows(
         drain(tumbling(), "complete").select("event_type", "n"), "event_type", "n"
     )
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(
-        conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    with scoped_conf(spark, **{provider: ROCKSDB_PROVIDER}):
         rocks = _rows(
             drain(tumbling(), "complete").select("event_type", "n"), "event_type", "n"
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
     assert rocks == baseline
 
 
@@ -375,14 +371,10 @@ def test_results_invariant_under_partitioning(spark, registry):
         k: sorted(map(repr, registry[k].fn(spark, SF_DIR).collect()))
         for k in keys
     }
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "5")
-    try:
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "5"}):
         for k in keys:
             again = sorted(map(repr, registry[k].fn(spark, SF_DIR).collect()))
             assert again == baseline[k], f"{k} changed under repartitioning"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_pagerank_mass_conservation(spark, registry):
@@ -636,17 +628,15 @@ def test_watermark_bounds_state_growth_under_out_of_order_replay(spark):
     from pyspark.sql import functions as F
 
     from training_feed_kinesis_spark.operators.scans import scratch_dir
-    from training_feed_kinesis_spark.streaming.replay import replay_stream
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf, None)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    from training_feed_kinesis_spark.streaming.replay import (
+        ROCKSDB_PROVIDER,
+        replay_stream,
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+
+    with scoped_conf(spark, **{
+        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+        "spark.sql.shuffle.partitions": "8",
+    }):
         stream = replay_stream(spark, SF_DIR, "shuffled")
         agg = (
             stream.withWatermark("ts", "2 hours")
@@ -663,12 +653,6 @@ def test_watermark_bounds_state_growth_under_out_of_order_replay(spark):
         )
         q.awaitTermination()
         progresses = [p for p in q.recentProgress if p["stateOperators"]]
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev_provider)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     assert progresses, "no stateful progress recorded"
     # the event corpus spans ~30 days ⇒ ~720 hourly windows; with a 2-hour
@@ -1153,25 +1137,17 @@ def test_money_results_partition_invariant(spark, registry, key):
     regressing into any of these keys shows up here as a last-ulp (or
     ROUND-boundary) difference between the two runs."""
     spec = registry[key]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_coalesce = spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.enabled", "true"
-    )
 
     def run(n):
         # coalescing OFF: at test scale AQE would merge both the 3- and
         # 17-partition shuffles down to the same post-shuffle layout,
         # giving both runs the same reduction order and making the pin
         # vacuous (code review r6)
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
+        with scoped_conf(spark, **{
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.shuffle.partitions": str(n),
+        }):
             return sorted(repr(r) for r in spec.fn(spark, SF_DIR).collect())
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(
-                "spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce
-            )
 
     a, b = run(3), run(17)
     assert a == b

@@ -25,6 +25,7 @@ from tests.conftest import SF_DIR
 from training_feed_kinesis_spark.operators.sketches_curation import (
     llm_dsir_weight,
 )
+from training_feed_kinesis_spark.session import scoped_conf
 from training_feed_kinesis_spark.tables import TABLES
 
 
@@ -109,10 +110,6 @@ def test_dsir_weight_is_partitioning_free(spark, permuted_dirs):
     changes; an exact integer SUM cannot)."""
     fwd = permuted_dirs[0]
     base = _rows(spark, fwd)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "1"}):
         one = _rows(spark, fwd)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert base == one

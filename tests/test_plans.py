@@ -15,6 +15,8 @@ import io
 
 import pytest
 
+from training_feed_kinesis_spark.session import scoped_conf
+
 from .conftest import SF_DIR
 
 
@@ -111,16 +113,11 @@ def test_bucketed_join_has_no_shuffle(spark, registry):
     registry["join_bucketed"].fn(spark, SF_DIR)
     # disable broadcast so the planner must consider a shuffle — bucket
     # alignment is what makes it unnecessary
-    for conf in (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    ):
-        spark.conf.set(conf, "-1")
-    try:
+    with scoped_conf(spark, **{
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    }):
         plan = _plan(registry["join_bucketed"].fn(spark, SF_DIR))
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     assert "SortMergeJoin" in plan, plan
     # no shuffle exchange anywhere: both scans are bucket-aligned on the key
     assert "hashpartitioning" not in plan, plan
@@ -440,11 +437,10 @@ def test_scan_agg_pushdown_reaches_footer(spark):
 
     from .conftest import SF_DIR
 
-    prev_agg = spark.conf.get("spark.sql.parquet.aggregatePushDown", "false")
-    prev_v1 = spark.conf.get("spark.sql.sources.useV1SourceList", None)
-    spark.conf.set("spark.sql.parquet.aggregatePushDown", "true")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try:
+    with scoped_conf(spark, **{
+        "spark.sql.parquet.aggregatePushDown": "true",
+        "spark.sql.sources.useV1SourceList": "",
+    }):
         li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
         df = li.agg(
             F.count(F.lit(1)).alias("n"), F.min("l_quantity").alias("m")
@@ -453,12 +449,6 @@ def test_scan_agg_pushdown_reaches_footer(spark):
         with contextlib.redirect_stdout(buf):
             df.explain(True)
         assert "PushedAggregation" in buf.getvalue()
-    finally:
-        spark.conf.set("spark.sql.parquet.aggregatePushDown", prev_agg)
-        if prev_v1 is not None:
-            spark.conf.set("spark.sql.sources.useV1SourceList", prev_v1)
-        else:
-            spark.conf.unset("spark.sql.sources.useV1SourceList")
 
 
 def test_frame_sample_is_map_only(spark, registry):

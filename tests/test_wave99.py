@@ -12,6 +12,7 @@ import duckdb
 import pytest
 
 from training_feed_kinesis_spark.registry import load_all
+from training_feed_kinesis_spark.session import scoped_conf
 
 from .conftest import SF_DIR, assert_matches_oracle
 
@@ -470,23 +471,12 @@ def test_wave99_results_partition_invariant(spark, key):
     reduction orders). AQE coalescing is disabled so the two runs really
     shuffle differently (the money-pin discipline)."""
     spec = _REGISTRY[key]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_coalesce = spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.enabled", "true"
-    )
 
     def run(n):
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", "false"
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
+        with scoped_conf(spark, **{
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.shuffle.partitions": str(n),
+        }):
             return sorted(repr(r) for r in spec.fn(spark, SF_DIR).collect())
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(
-                "spark.sql.adaptive.coalescePartitions.enabled",
-                prev_coalesce,
-            )
 
     assert run(3) == run(17)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import scoped_conf
 from ..tables import load_table
 from .scans import scratch_dir
 
@@ -212,11 +213,13 @@ def cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
         df.write.mode("overwrite").saveAsTable(name)
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
-    prev_cbo = spark.conf.get("spark.sql.cbo.enabled", "false")
-    prev_reorder = spark.conf.get("spark.sql.cbo.joinReorder.enabled", "false")
-    try:
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    with scoped_conf(
+        spark,
+        **{
+            "spark.sql.cbo.enabled": "true",
+            "spark.sql.cbo.joinReorder.enabled": "true",
+        },
+    ):
         # worst-first order on purpose: the optimizer must fix it
         df = spark.sql(
             """
@@ -232,6 +235,3 @@ def cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         df.collect()  # force planning+execution under CBO confs
         return df
-    finally:
-        spark.conf.set("spark.sql.cbo.enabled", prev_cbo)
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", prev_reorder)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import scoped_conf
 from ..tables import load_table
 from .llm_dedup import _SHINGLE_ROWS_SQL, _shingle_rows
 from .scans import SCRATCH, scratch_dir
@@ -155,14 +156,7 @@ def bloom_join(spark: SparkSession, sf_dir: str):
     od = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    saved: dict[str, str | None] = {}
-    for k, v in _BLOOM_FORCE_CONFS.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, **_BLOOM_FORCE_CONFS):
         yield (
             li.join(od, li.l_orderkey == od.o_orderkey)
             .groupBy("o_orderpriority", "l_returnflag")
@@ -181,13 +175,6 @@ def bloom_join(spark: SparkSession, sf_dir: str):
                 ).alias("revenue"),
             )
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                with contextlib.suppress(Exception):
-                    spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @register(

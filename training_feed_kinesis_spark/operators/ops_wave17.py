@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
+from ..session import scoped_conf
 import os
 
 from ..tables import load_table
@@ -53,11 +54,13 @@ def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both confs flip on only for this query (saved/restored): the
     pushdown rule lives in the V2 reader, so parquet must also come off
     ``spark.sql.sources.useV1SourceList`` for the duration."""
-    prev_agg = spark.conf.get("spark.sql.parquet.aggregatePushDown", "false")
-    prev_v1 = spark.conf.get("spark.sql.sources.useV1SourceList", None)
-    spark.conf.set("spark.sql.parquet.aggregatePushDown", "true")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try:
+    with scoped_conf(
+        spark,
+        **{
+            "spark.sql.parquet.aggregatePushDown": "true",
+            "spark.sql.sources.useV1SourceList": "",
+        },
+    ):
         # read directly (not via any cached/converted frame) so the scan
         # node is the V2 parquet source the pushdown rule rewrites
         li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
@@ -88,15 +91,6 @@ def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.collect()  # force execution while the confs are on
         return out
-    finally:
-        spark.conf.set("spark.sql.parquet.aggregatePushDown", prev_agg)
-        # conf.get returns None when the conf was never explicitly set —
-        # restore means UNSET then, not set-to-None (a leaked "" keeps the
-        # whole session on the V2 reader, where _metadata is unsupported)
-        if prev_v1 is not None:
-            spark.conf.set("spark.sql.sources.useV1SourceList", prev_v1)
-        else:
-            spark.conf.unset("spark.sql.sources.useV1SourceList")
 
 
 @register(

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import scoped_conf
 from .exact import CENTS_SUM_SQL, cents_sum
 from ..tables import load_table
 
@@ -133,9 +134,7 @@ def scan_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             with open(os.path.join(root, "_READY"), "w") as fh:
                 fh.write("ok")
             track_scratch(root)
-    prev = spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false")
-    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
-    try:
+    with scoped_conf(spark, **{"spark.sql.files.ignoreCorruptFiles": "true"}):
         out = (
             spark.read.schema("event_id long, event_type string, ts timestamp")
             .parquet(root)
@@ -144,5 +143,3 @@ def scan_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.collect()  # force the scan while the conf is on
         return out
-    finally:
-        spark.conf.set("spark.sql.files.ignoreCorruptFiles", prev)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 _qc = itertools.count()
 
 from ..registry import register
+from ..session import scoped_conf
 from ..tables import load_table
 
 CAT_TEXT = "2.J llm-pipeline (text)"
@@ -121,23 +122,16 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same state-partition right-sizing as replay.drain(): the stateful
     # partition count is fixed at query start and each micro-batch commits
     # one state delta per partition — 200 defaults are pure overhead here
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("ckpt_prog_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .option("checkpointLocation", scratch_dir("ckpt_prog_"))
+        .trigger(availableNow=True)
+    )
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+        q = writer.start()
+    q.awaitTermination()
     # recentProgress retains every micro-batch of this short run; sum the
     # source-reported input rows — the number a dashboard reconciles
     total_in = sum(p["numInputRows"] for p in q.recentProgress)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import scoped_conf
 from ..tables import load_table
 from .scans import scratch_dir
 
@@ -104,9 +105,7 @@ def sql_scripting_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "customer_scr"
     )
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation_scr")
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with scoped_conf(spark, **{"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -138,11 +137,6 @@ def sql_scripting_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 @register(

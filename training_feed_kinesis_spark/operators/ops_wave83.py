@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import scoped_conf
 from ..tables import load_table
 
 CAT_STREAM = "2.I streaming"
@@ -153,23 +154,18 @@ def stream_watermark_gap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..streaming.replay import _ckpt_dir
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     name = f"tfk_wm_gap_{abs(hash(sf_dir)) % 10_000}"
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _ckpt_dir())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progresses = list(q.recentProgress)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", _ckpt_dir())
+        .trigger(availableNow=True)
+    )
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+        q = writer.start()
+    q.awaitTermination()
+    progresses = list(q.recentProgress)
     input_rows = sum(p["numInputRows"] for p in progresses)
     dropped = sum(
         p["stateOperators"][0]["numRowsDroppedByWatermark"]

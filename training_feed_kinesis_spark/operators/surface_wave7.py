@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
+from ..session import scoped_conf
 from .exact import CENTS_SUM_SQL, cents_sum
 from ..tables import load_table, release_after
 
@@ -196,25 +197,22 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
     ).select(F.dayofmonth("ts").alias("d"), F.col("value").alias("v"))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
     # the FULL write runs in STATIC mode so it truncates the reused
     # deterministic dir — under dynamic mode a shrunken/empty corpus
     # would leave stale day partitions from a previous invocation in
     # place (code review r6); only the day-5/6 restatement exercises
     # the dynamic contract under test
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    with scoped_conf(spark, **{mode: "static"}):
         ev.write.mode("overwrite").partitionBy("d").parquet(out)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            ev.filter(F.col("d").isin(5, 6))
-            .withColumn("v", F.col("v") * 2)
-            .write.mode("overwrite")
-            .partitionBy("d")
-            .parquet(out)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        with scoped_conf(spark, **{mode: "dynamic"}):
+            (
+                ev.filter(F.col("d").isin(5, 6))
+                .withColumn("v", F.col("v") * 2)
+                .write.mode("overwrite")
+                .partitionBy("d")
+                .parquet(out)
+            )
     # explicit schema: an EMPTY input writes no partition dirs and
     # schema inference would fail (empty-corpus census r6)
     back = spark.read.schema(ev.schema).parquet(out)

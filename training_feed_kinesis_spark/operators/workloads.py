@@ -18,12 +18,12 @@ from ..tables import load_table, sane_ts, sane_ts_sql
 CAT = "2.M workloads"
 
 # Exact scale-1e4 revenue term — same spelling as workloads_tpch._REV_S
-# (kept textually duplicated rather than imported: this module registers
-# BEFORE workloads_tpch in registry._OPERATOR_MODULES, and an import
-# would flip the two modules' registration order, which the driver's
-# sample-window rotation keys off). See workloads_tpch.py for the full
-# §5.3.6b rationale; tests/test_consistency.py pins the two constants
-# equal.
+# (kept textually duplicated rather than imported: registry.load_all()
+# imports modules in name order, so this module registers BEFORE
+# workloads_tpch, and an import would flip the two modules' registration
+# order, which the driver's sample window keys off). See workloads_tpch.py
+# for the full §5.3.6b rationale; tests/test_consistency.py pins the two
+# constants equal.
 _REV_S = (
     "CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)"
     " * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT))"

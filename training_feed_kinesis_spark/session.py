@@ -14,7 +14,9 @@ cluster these come from cluster conf, not code; nothing here hard-schedules.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -23,9 +25,10 @@ from pyspark.sql import SparkSession
 #   session-tz-aware. UTC makes both engines see identical wall-clock values
 #   (SURVEY.md §1.4, probe-verified).
 # - nanosAsLong: Spark 4.1.2 refuses INT64 TIMESTAMP(NANOS) parquet outright
-#   ([PARQUET_TYPE_ILLEGAL]); events.parquet stores timestamp[ns]. With this
-#   legacy flag the column arrives as LongType nanos and tables.py converts
-#   with integer division (exact parity with DuckDB's truncation).
+#   ([PARQUET_TYPE_ILLEGAL]); older events.parquet generations store
+#   timestamp[ns] (today's store timestamp[us]). With this legacy flag the
+#   column arrives as LongType nanos and tables.py converts with integer
+#   division (exact parity with DuckDB's truncation).
 _CORRECTNESS_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -51,6 +54,31 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on this deployment; perf-only, never correctness
     return spark
+
+
+# Session confs are global, not thread-local: every temporary conf change
+# in the package goes through scoped_conf, serialized by this one lock.
+_CONF_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, **confs: str):
+    """Set session confs for the ``with`` body and restore them exactly on
+    exit: a key that was unset is unset again, any other key gets its old
+    value back. Conf names contain dots, so pass them as
+    ``**{"spark.sql.x": "v"}``. Nesting is safe."""
+    with _CONF_LOCK:
+        saved = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def build_session(app_name: str = "training-feed-kinesis-spark") -> SparkSession:

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.scans import scratch_dir
+from ..session import scoped_conf
 from ..tables import load_table
 
 N_REPLAY_FILES = 4
@@ -256,9 +257,9 @@ def drain(
     sink; return the materialized batch DataFrame. The memory sink is a
     test/CI harness — production sinks are parquet/foreachBatch.
 
-    ``state_partitions`` right-sizes ``spark.sql.shuffle.partitions`` for the
-    duration of the drain (the stateful-operator partition count is fixed at
-    query start from that conf, and each micro-batch commits one state-store
+    ``state_partitions`` right-sizes ``spark.sql.shuffle.partitions`` for
+    this query (the stateful-operator partition count is fixed at query
+    start from that conf, and each micro-batch commits one state-store
     delta PER partition): the replay corpus has O(10³) keys, where 64 state
     partitions × N batches is pure commit overhead — measured 2.5× slower
     than 8. On a real cluster state cardinality is huge and the conf comes
@@ -269,39 +270,30 @@ def drain(
     provider (off-heap/on-disk keyed state + changelog checkpointing) —
     the 100 TB posture, where state cardinality outgrows executor heap;
     the provider is picked up at query start, so a per-drain conf scope
-    is enough and results are identical by construction."""
+    is enough and results are identical by construction.
+
+    A query fixes its confs when it starts, so both are scoped to
+    ``start()`` alone: concurrent drains hold the conf lock only briefly."""
     global LAST_PROGRESS
     spark = df.sparkSession
     name = f"tfk_replay_{next(_qcounter)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    provider_conf = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_conf, None)
+    confs = {}
     if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
     if rocksdb:
-        spark.conf.set(provider_conf, ROCKSDB_PROVIDER)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint or _ckpt_dir())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        LAST_PROGRESS = q.lastProgress
-    finally:
-        if state_partitions is not None and prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if rocksdb:
-            if prev_provider is None:
-                spark.conf.unset(provider_conf)
-            else:
-                spark.conf.set(provider_conf, prev_provider)
+        confs["spark.sql.streaming.stateStore.providerClass"] = ROCKSDB_PROVIDER
+        confs[
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+        ] = "true"
+    writer = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint or _ckpt_dir())
+        .trigger(availableNow=True)
+    )
+    with scoped_conf(spark, **confs):
+        q = writer.start()
+    q.awaitTermination()
+    LAST_PROGRESS = q.lastProgress
     return spark.table(name)

@@ -1,9 +1,12 @@
 """Parquet table loading for the TESTDATA.md star schema + events stream table.
 
 Load-time normalization (SURVEY.md §1.4, probe-verified):
-  * ``events.ts`` is stored as parquet ``timestamp[ns]``; with
+  * ``events.ts`` is stored as parquet ``timestamp[us]`` without a time
+    zone (as are the lineitem/orders timestamps), which Spark reads as
+    TIMESTAMP_NTZ; it is cast here to session-tz TimestampType, because
+    watermarks reject NTZ. Older fixtures stored ``timestamp[ns]``: with
     ``spark.sql.legacy.parquet.nanosAsLong=true`` it arrives as LongType
-    nanos and is converted here ONCE with integer division
+    nanos and is converted ONCE with integer division
     ``timestamp_micros(ts div 1000)`` — float division is off by 1µs on some
     rows vs DuckDB's truncation; integer ``div`` gives exact raw-value parity.
 
