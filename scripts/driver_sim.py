@@ -84,6 +84,7 @@ spark = SparkSession.builder.master("local[8]").config("spark.ui.enabled","false
     .config("spark.ui.showConsoleProgress","false").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as e
+from training_feed_kinesis_spark import tables
 
 rows = e.entry(spark).collect()
 print(f"entry(): {len(rows)} rows  first={rows[0]}")
@@ -103,8 +104,11 @@ for i, k in enumerate(keys):
         # sketch materializations) accumulate until the heap OOMs
         # (observed at sf0.1 around key ~255). Clearing the cache
         # periodically keeps WITHIN-key reuse while bounding the total;
-        # anything cleared just recomputes lazily on next use.
+        # anything cleared just recomputes lazily on next use. The
+        # substrate memo goes too, or its entries would point at evicted
+        # caches (recomputed per use instead of rebuilt once).
         spark.catalog.clearCache()
+        tables._SUBSTRATE_MEMO.clear()
     t0 = time.time()
     try:
         pdf = qs[k](spark, SF).toPandas()

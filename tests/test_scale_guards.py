@@ -1,6 +1,6 @@
 """Skew / hot-key stress tests for the scale-critical operators.
 
-Synthetic worst-case fixtures (written to scratch, never touching
+Synthetic worst-case fixtures (written to pytest temp dirs, never touching
 /root/testdata): a heavily duplicated document cluster for the LSH dedup
 path, and a hot user for the point-in-time feature window. Each test
 asserts the SHAPE guarantee the operator's docstring claims — bounded
@@ -16,8 +16,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from training_feed_kinesis_spark.operators.scans import SCRATCH
-
 
 @pytest.fixture(scope="module")
 def registry():
@@ -27,11 +25,11 @@ def registry():
 
 
 @pytest.fixture(scope="module")
-def dup_corpus_dir(spark):
+def dup_corpus_dir(spark, tmp_path_factory):
     """120 docs: 50 verbatim copies of one 40-token text + 70 distinct
     texts (deterministic token soup). Written as documents.parquet so
     operators load it through the normal path."""
-    out = os.path.join(SCRATCH, "stress_dup_corpus")
+    out = str(tmp_path_factory.mktemp("stress_dup_corpus"))
     dup_text = " ".join(f"tok{i % 13}w{i}" for i in range(40))
     rows = [(i, dup_text, "en", "srcA", len(dup_text)) for i in range(50)]
     for i in range(50, 120):
@@ -73,7 +71,7 @@ def test_lsh_dedup_hot_cluster_bounded(spark, dup_corpus_dir, registry):
     assert floor <= n_cands <= floor + 0.05 * all_pairs, n_cands
 
 
-def test_pit_snapshot_hot_user_linear(spark):
+def test_pit_snapshot_hot_user_linear(spark, tmp_path):
     """One user with 5000 interleaved events: the RANGE-frame spelling
     must produce exact trailing counts (cross-checked against a pandas
     rolling computation) — the window is one sorted pass per user, never
@@ -102,7 +100,7 @@ def test_pit_snapshot_hot_user_linear(spark):
         )
         for i in range(n)
     ]
-    out = os.path.join(SCRATCH, "stress_hot_user")
+    out = str(tmp_path / "stress_hot_user")
     spark.createDataFrame(
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, "
@@ -210,7 +208,7 @@ def test_dedup_quality_shift_conservation_on_dup_cluster(
     assert r.mean_ttr_after is not None
 
 
-def test_semdedup_drops_identical_vectors_only(spark, registry):
+def test_semdedup_drops_identical_vectors_only(spark, registry, tmp_path):
     """Embedding stress fixture: 60 copies of one vector + 40 mutually
     orthogonal vectors. SemDeDup must drop exactly the 59 non-keeper
     copies (cosine 1.0 within the cluster) and keep every orthogonal
@@ -218,7 +216,7 @@ def test_semdedup_drops_identical_vectors_only(spark, registry):
     zero false drops."""
     import os
 
-    out = os.path.join(SCRATCH, "stress_sem_embed")
+    out = str(tmp_path / "stress_sem_embed")
     rows = []
     base = [1.0] + [0.0] * 63
     for i in range(60):

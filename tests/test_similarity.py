@@ -108,7 +108,7 @@ def test_multimodal_transform_invariants(spark):
             assert r.out_bytes == 8 and r.n_frames_sampled == 2
 
 
-def test_sim_lsh_recall_floor_on_planted_pairs(spark):
+def test_sim_lsh_recall_floor_on_planted_pairs(spark, tmp_path):
     """Recall invariant for the LSH candidate generator (VERDICT r3 item 7):
     the corpus has no true sub-threshold pairs (the precision test above is
     therefore recall-vacuous), so plant 20 twin pairs at distance ~0.3
@@ -121,7 +121,6 @@ def test_sim_lsh_recall_floor_on_planted_pairs(spark):
     import numpy as np
 
     from training_feed_kinesis_spark.operators.llm_similarity import llm_sim_lsh
-    from training_feed_kinesis_spark.operators.scans import SCRATCH
 
     rng = np.random.default_rng(7)
     rows, truth = [], set()
@@ -136,7 +135,7 @@ def test_sim_lsh_recall_floor_on_planted_pairs(spark):
     for _ in range(60):
         rows.append((vid, (rng.normal(0, 2.0, 64)).astype("float32").tolist(), 1))
         vid += 1
-    d = os.path.join(SCRATCH, "lsh_recall_fixture")
+    d = str(tmp_path / "lsh_recall_fixture")
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "embeddings.parquet"))

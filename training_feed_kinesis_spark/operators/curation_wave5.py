@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import load_table
+from .llm_dedup import NEAR_ORACLE, llm_dedup_near
 
 CAT_TEXT = "2.J llm-pipeline (text)"
 CAT_DEDUP = "2.J llm-pipeline (dedup)"
@@ -105,7 +106,16 @@ def llm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_crosssource_dup",
     CAT_DEDUP,
     # reuse the full near-dup oracle, then collapse pairs onto source pairs
-    None,  # placeholder replaced below (needs llm_dedup SQL constants)
+    f"""
+    WITH near AS ({NEAR_ORACLE}),
+    src AS (SELECT doc_id, source FROM documents)
+    SELECT LEAST(a.source, b.source) AS src_a,
+           GREATEST(a.source, b.source) AS src_b,
+           COUNT(*)::BIGINT AS n_pairs
+    FROM near JOIN src a ON a.doc_id = near.a_id
+              JOIN src b ON b.doc_id = near.b_id
+    GROUP BY 1, 2
+    """,
 )
 def llm_crosssource_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source duplication matrix: MinHash-LSH verified near-dup
@@ -117,8 +127,6 @@ def llm_crosssource_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the expensive part IS llm_dedup_near (LSH-bounded); the
     rollup joins the pair list (small) to a two-column doc→source dim —
     broadcast when source metadata fits, hash join otherwise."""
-    from .llm_dedup import llm_dedup_near
-
     pairs = llm_dedup_near(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     sa = d.select(F.col("doc_id").alias("a_id"), F.col("source").alias("src_of_a"))
@@ -132,33 +140,6 @@ def llm_crosssource_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
     )
-
-
-def _patch_crosssource_oracle() -> None:
-    """Attach the cross-source oracle, building on llm_dedup_near's SQL
-    (imported, not duplicated — one definition of the LSH pipeline)."""
-    from ..registry import REGISTRY, QuerySpec
-    from . import llm_dedup  # noqa: F401  (import registers llm_dedup_near)
-
-    near = REGISTRY["llm_dedup_near"].oracle
-    assert near is not None
-    sql = f"""
-    WITH near AS ({near}),
-    src AS (SELECT doc_id, source FROM documents)
-    SELECT LEAST(a.source, b.source) AS src_a,
-           GREATEST(a.source, b.source) AS src_b,
-           COUNT(*)::BIGINT AS n_pairs
-    FROM near JOIN src a ON a.doc_id = near.a_id
-              JOIN src b ON b.doc_id = near.b_id
-    GROUP BY 1, 2
-    """
-    spec = REGISTRY["llm_crosssource_dup"]
-    REGISTRY["llm_crosssource_dup"] = QuerySpec(
-        key=spec.key, fn=spec.fn, oracle=sql, category=spec.category
-    )
-
-
-_patch_crosssource_oracle()
 
 
 # --- truncated-dimension recall (Matryoshka) -------------------------------

@@ -32,7 +32,7 @@ from ..registry import register
 from ..session import scoped_conf
 from ..tables import load_table
 from .llm_dedup import _SHINGLE_ROWS_SQL, _shingle_rows
-from .scans import SCRATCH, scratch_dir
+from .scans import derived_dir, scratch_dir
 
 CAT_JOIN = "2.C joins"
 CAT_LLM = "2.J llm-pipeline"
@@ -70,41 +70,22 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact × filtered-dim star joins scan-bounded; static pruning
     (scan_pruned_partitions) cannot see through a join.
     """
-    # Deterministic per-sf scratch path, reused across invocations (a
-    # mkdtemp per call would accumulate full fact copies under .scratch/);
-    # the _READY marker guards against a partial dir from a crashed writer.
-    # v2: the fact copy carries the exact scale-1e4 integer revenue term
-    # (§5.3.6b) instead of a per-row double — the dir tag busts the
-    # _READY cache of the old-schema copy
-    sf_tag = sf_dir.strip("/").split("/")[-1].replace(".", "_")
-    # content-keyed cache tag (the replay._prepare / ADVICE r5 lesson): a
-    # name-only key serves a STALE fact copy when a fixture dir is
-    # rebuilt in place (caught by the r12 temporal-campaign resweep)
-    try:
-        st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-        sf_tag += f"_{st.st_mtime_ns}_{st.st_size}"
-    except OSError:
-        pass
-    # session-scoped (r12 optimization-round contract): derived-from-testdata
-    # fixture dirs must not outlive the process that built them
-    sf_tag += f"_{spark.sparkContext.applicationId}"
-    out = os.path.join(SCRATCH, f"dpp_fact_v2_{sf_tag}")
     li = load_table(spark, sf_dir, "lineitem").select(
         F.year("l_shipdate").cast("int").alias("shipyear"),
         "l_returnflag",
+        # the exact scale-1e4 integer revenue term (§5.3.6b), not a
+        # per-row double
         F.expr(
             "CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)"
             " * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT))"
         ).alias("rev_s"),
     )
-    from .scans import FIXTURE_LOCK, track_scratch
 
-    with FIXTURE_LOCK:
-        if not os.path.isfile(os.path.join(out, "_READY")):
-            li.write.mode("overwrite").partitionBy("shipyear").parquet(out)
-            with open(os.path.join(out, "_READY"), "w") as f:
-                f.write("ok")
-            track_scratch(out)
+    def build(out: str) -> None:
+        li.write.mode("overwrite").partitionBy("shipyear").parquet(out)
+
+    lineitem = os.path.join(sf_dir, "lineitem.parquet")
+    out = derived_dir(spark, "dpp_fact", [lineitem], build)
     # explicit schema: an EMPTY input writes no partition dirs and
     # schema inference would fail (empty-corpus census r6)
     fact = spark.read.schema(li.schema).parquet(out)

@@ -315,15 +315,15 @@ NEAR_PAIRS_SELECT = f"""SELECT v.a_id, v.b_id,
            ROUND(v.inter * 1.0 / (ca.n + cb.n - v.inter), 4) AS jaccard
     {NEAR_PAIRS_FROM_WHERE}"""
 
-
-@register(
-    "llm_dedup_near",
-    CAT,
-    f"""
+# llm_dedup_near's oracle, composed by the sweep, cross-source and
+# incremental-stream oracles
+NEAR_ORACLE = f"""
     WITH {NEAR_PAIRS_CTES}
     {NEAR_PAIRS_SELECT}
-    """,
-)
+    """
+
+
+@register("llm_dedup_near", CAT, NEAR_ORACLE)
 def llm_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup detection: shingle → minhash(k=8) → band into
     4 bands of 2 → bucket-join candidates → EXACT Jaccard verification.
@@ -444,10 +444,8 @@ WINNOW_W = 16    # window of consecutive k-gram hashes; min per window kept
 _WINNOW_ROWLOCAL_MAX = 65536
 
 
-@register(
-    "llm_winnow",
-    CAT,
-    f"""
+# llm_winnow's oracle, composed by llm_winnow_pairs
+WINNOW_ORACLE = f"""
     WITH positions AS (
       -- version identity hashes the SAME input both engines: md5 of the
       -- LOWERCASED text, matching the Spark branch (ADVICE r7 — with
@@ -477,8 +475,10 @@ _WINNOW_ROWLOCAL_MAX = 65536
       FROM grams
     )
     SELECT DISTINCT doc_id, fp FROM winmin
-    """,
-)
+    """
+
+
+@register("llm_winnow", CAT, WINNOW_ORACLE)
 def llm_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (the rolling-hash scheme of MOSS,
     Schleimer et al. 2003): hash every 8-char-gram, slide a 16-hash window,

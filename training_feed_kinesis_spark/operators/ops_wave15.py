@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
+from .scans import derived_dir
 
 CAT_TEXT = "2.J llm-pipeline (text)"
 CAT_DEDUP = "2.J llm-pipeline (dedup)"
@@ -159,19 +160,17 @@ def dq_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     not table rows — there is nothing for a SQL oracle to recompute.
     Scale: schema inspection reads footers only; cost is O(files),
     independent of row count."""
-    from .scans import SCRATCH
 
-    base = load_table(spark, sf_dir, "events")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(SCRATCH, f"drift3_{sf_tag}")
-    v1_dir, v2_dir = os.path.join(root, "v1"), os.path.join(root, "v2")
-    if not os.path.isfile(os.path.join(root, "_READY")):
-        base.write.mode("overwrite").parquet(v1_dir)
+    def build(out: str) -> None:
+        base = load_table(spark, sf_dir, "events")
+        base.write.parquet(os.path.join(out, "v1"))
         base.drop("props").withColumn("schema_ver", F.lit(2)).withColumn(
             "value", F.col("value").cast("float")
-        ).write.mode("overwrite").parquet(v2_dir)
-        with open(os.path.join(root, "_READY"), "w") as fh:
-            fh.write("ok")
+        ).write.parquet(os.path.join(out, "v2"))
+
+    events = os.path.join(sf_dir, "events.parquet")
+    root = derived_dir(spark, "schema_drift", [events], build)
+    v1_dir, v2_dir = os.path.join(root, "v1"), os.path.join(root, "v2")
     s1 = {f.name: f.dataType.simpleString() for f in spark.read.parquet(v1_dir).schema}
     s2 = {f.name: f.dataType.simpleString() for f in spark.read.parquet(v2_dir).schema}
     rows = []

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
+from .llm_dedup import NEAR_ORACLE, llm_dedup_near
 
 CAT_SIM = "2.J llm-pipeline (similarity)"
 CAT_DEDUP = "2.J llm-pipeline (dedup)"
@@ -99,7 +100,14 @@ def vec_cosine_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_dedup_threshold_sweep",
     CAT_DEDUP,
-    None,  # oracle attached below — composes llm_dedup_near's SQL
+    f"""
+    WITH near AS ({NEAR_ORACLE}),
+    th AS (SELECT unnest([0.6, 0.7, 0.8, 0.9]) AS threshold)
+    SELECT th.threshold, COUNT(*)::BIGINT AS n_pairs,
+           COUNT(DISTINCT near.b_id)::BIGINT AS n_docs_dropped
+    FROM near JOIN th ON near.jaccard >= th.threshold
+    GROUP BY th.threshold
+    """,
 )
 def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup aggressiveness tuning curve: the LSH-verified near-dup pairs
@@ -110,8 +118,6 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the candidate/verify pipeline runs ONCE at the loosest
     threshold; re-thresholding is free."""
-    from .llm_dedup import llm_dedup_near
-
     pairs = llm_dedup_near(spark, sf_dir)
     th = F.explode(F.array(*[F.lit(t) for t in (0.6, 0.7, 0.8, 0.9)])).alias(
         "threshold"
@@ -123,29 +129,6 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.countDistinct("b_id").cast("long").alias("n_docs_dropped"),
     )
-
-
-def _patch_sweep_oracle() -> None:
-    from ..registry import REGISTRY, QuerySpec
-    from . import llm_dedup  # noqa: F401
-
-    near = REGISTRY["llm_dedup_near"].oracle
-    assert near is not None
-    sql = f"""
-    WITH near AS ({near}),
-    th AS (SELECT unnest([0.6, 0.7, 0.8, 0.9]) AS threshold)
-    SELECT th.threshold, COUNT(*)::BIGINT AS n_pairs,
-           COUNT(DISTINCT near.b_id)::BIGINT AS n_docs_dropped
-    FROM near JOIN th ON near.jaccard >= th.threshold
-    GROUP BY th.threshold
-    """
-    spec = REGISTRY["llm_dedup_threshold_sweep"]
-    REGISTRY["llm_dedup_threshold_sweep"] = QuerySpec(
-        key=spec.key, fn=spec.fn, oracle=sql, category=spec.category
-    )
-
-
-_patch_sweep_oracle()
 
 
 _CUT = "2024-01-22 00:00:00"

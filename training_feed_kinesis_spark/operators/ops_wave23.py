@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
+from .llm_dedup import WINNOW_ORACLE, llm_winnow
 
 CAT_AGG = "2.D aggregations"
 CAT_DEDUP = "2.J llm-pipeline (dedup)"
@@ -123,7 +124,14 @@ def agg_countmin_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "llm_winnow_pairs",
     CAT_DEDUP,
-    None,  # oracle attached below — composes llm_winnow's verified SQL
+    f"""
+    WITH fps AS ({WINNOW_ORACLE})
+    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+           COUNT(*)::BIGINT AS shared_fps
+    FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
+    GROUP BY a.doc_id, b.doc_id
+    HAVING COUNT(*) >= {_MIN_SHARED}
+    """,
 )
 def llm_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-overlap pairs from winnowing fingerprints: docs sharing
@@ -138,8 +146,6 @@ def llm_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint is bounded by how many docs actually share the passage
     (hot boilerplate would get a df cap exactly like
     ``llm_stopshingle_jaccard``)."""
-    from .llm_dedup import llm_winnow
-
     fps = llm_winnow(spark, sf_dir)
     a = fps.select(F.col("doc_id").alias("a_id"), "fp")
     b = fps.select(F.col("doc_id").alias("b_id"), "fp")
@@ -150,26 +156,3 @@ def llm_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
         .filter(F.col("shared_fps") >= _MIN_SHARED)
     )
-
-
-def _patch_winnow_pairs_oracle() -> None:
-    from ..registry import REGISTRY, QuerySpec
-    from . import llm_dedup  # noqa: F401  (import registers llm_winnow)
-
-    winnow = REGISTRY["llm_winnow"].oracle
-    assert winnow is not None
-    sql = f"""
-    WITH fps AS ({winnow})
-    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-           COUNT(*)::BIGINT AS shared_fps
-    FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-    HAVING COUNT(*) >= {_MIN_SHARED}
-    """
-    spec = REGISTRY["llm_winnow_pairs"]
-    REGISTRY["llm_winnow_pairs"] = QuerySpec(
-        key=spec.key, fn=spec.fn, oracle=sql, category=spec.category
-    )
-
-
-_patch_winnow_pairs_oracle()

@@ -26,6 +26,7 @@ from ..registry import register
 from ..session import scoped_conf
 from .exact import CENTS_SUM_SQL, cents_sum
 from ..tables import load_table
+from .scans import derived_dir, scratch_dir
 
 # exact integer-cents SUM of events.value, unrounded (r11 projected-
 # magnitude lint, SURVEY 5.3.9a): total_value is a SUM-driven grower
@@ -54,11 +55,7 @@ def sink_manifest_atomic_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the transactional-commit primitive table formats
     formalize (Delta/Iceberg manifest pointer); the snapshot directories
     double as time travel."""
-    from .scans import SCRATCH
-
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(SCRATCH, f"atomic_swap_{sf_tag}")
-    os.makedirs(root, exist_ok=True)
+    root = scratch_dir("atomic_swap_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -106,34 +103,16 @@ def scan_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped.
 
     Conf flipped only for this read (saved/restored)."""
-    from .scans import SCRATCH
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    # content-keyed cache tag (replay._prepare / ADVICE r5 discipline): a
-    # name-only key serves a STALE copy when a fixture dir is rebuilt in
-    # place (caught by the r12 temporal-campaign resweep)
-    try:
-        _st = os.stat(os.path.join(sf_dir, "events.parquet"))
-        sf_tag += f"_{_st.st_mtime_ns}_{_st.st_size}"
-    except OSError:
-        pass
-    # session-scoped (r12 optimization-round contract): derived-from-testdata
-    # fixture dirs must not outlive the process that built them
-    sf_tag += f"_{spark.sparkContext.applicationId}"
-    root = os.path.join(SCRATCH, f"corrupt_scan_{sf_tag}")
-    ev = load_table(spark, sf_dir, "events")
-    from .scans import FIXTURE_LOCK, track_scratch
+    def build(out: str) -> None:
+        load_table(spark, sf_dir, "events").filter(F.dayofmonth("ts") <= 10).select(
+            "event_id", "event_type", "ts"
+        ).write.mode("overwrite").parquet(out)
+        with open(os.path.join(out, "part-corrupt.parquet"), "wb") as fh:
+            fh.write(b"PAR1 this is not a real parquet footer")
 
-    with FIXTURE_LOCK:
-        if not os.path.isfile(os.path.join(root, "_READY")):
-            ev.filter(F.dayofmonth("ts") <= 10).select(
-                "event_id", "event_type", "ts"
-            ).write.mode("overwrite").parquet(root)
-            with open(os.path.join(root, "part-corrupt.parquet"), "wb") as fh:
-                fh.write(b"PAR1 this is not a real parquet footer")
-            with open(os.path.join(root, "_READY"), "w") as fh:
-                fh.write("ok")
-            track_scratch(root)
+    events = os.path.join(sf_dir, "events.parquet")
+    root = derived_dir(spark, "corrupt_scan", [events], build)
     with scoped_conf(spark, **{"spark.sql.files.ignoreCorruptFiles": "true"}):
         out = (
             spark.read.schema("event_id long, event_type string, ts timestamp")

@@ -19,11 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import REGISTRY, register
+from ..registry import register
 from ..tables import load_table
-
-# llm_dedup_near must be registered so its oracle can be composed below
-from . import llm_dedup  # noqa: F401
+from . import llm_dedup
 
 CAT_TS = "2.L time-series analytics"
 CAT_DEDUP = "2.J llm-pipeline (dedup)"
@@ -187,7 +185,7 @@ _SPLIT_SQL = """CASE WHEN substr(md5(doc_id::VARCHAR), 1, 2) < 'cc' THEN 'train'
            COUNT(DISTINCT a_id)::BIGINT AS n_a_docs,
            COUNT(DISTINCT b_id)::BIGINT AS n_b_docs
     FROM crossed GROUP BY split_lo, split_hi
-    """.format(near=REGISTRY["llm_dedup_near"].oracle),
+    """.format(near=llm_dedup.NEAR_ORACLE),
 )
 def llm_split_leakage_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate leakage ACROSS the train/val/test hash split:

@@ -19,7 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import REGISTRY, register
+from ..registry import register
+from ..streaming.replay import _stamp_mtimes
 from ..tables import load_table
 
 # shared LSH construction — SAME constants/expressions as the batch
@@ -27,10 +28,12 @@ from ..tables import load_table
 from .llm_dedup import (  # noqa: F401
     BAND_SIZE,
     JACCARD_THRESHOLD,
+    NEAR_ORACLE,
     N_SEEDS,
     _SHINGLES,
     _TOK,
 )
+from .scans import derived_dir, scratch_dir
 
 CAT_STREAM = "2.I streaming"
 
@@ -41,44 +44,16 @@ def _doc_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """Range-partition documents.parquet into doc_id-ordered files with
     strictly increasing mtimes — the deterministic document stream (the
     events replay discipline applied to the corpus table)."""
-    from ..streaming.replay import _stamp_mtimes
-    from .scans import SCRATCH
 
-    sf_tag = sf_dir.strip("/").split("/")[-1].replace(".", "_")
-    # content-keyed cache tag (replay._prepare / ADVICE r5 discipline): a
-    # name-only key serves a STALE copy when a fixture dir is rebuilt in
-    # place (caught by the r12 temporal-campaign resweep)
-    try:
-        _st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-        sf_tag += f"_{_st.st_mtime_ns}_{_st.st_size}"
-    except OSError:
-        pass
-    # session-scoped (r12 optimization-round contract): derived-from-testdata
-    # fixture dirs must not outlive the process that built them
-    sf_tag += f"_{spark.sparkContext.applicationId}"
-    out = os.path.join(SCRATCH, f"docs_replay_{sf_tag}")
-    from .scans import FIXTURE_LOCK
+    def build(out: str) -> None:
+        d = load_table(spark, sf_dir, "documents")
+        d.repartitionByRange(_N_DOC_FILES, "doc_id").sortWithinPartitions(
+            "doc_id"
+        ).write.mode("overwrite").parquet(out)
+        _stamp_mtimes(out)
 
-    with FIXTURE_LOCK:
-        return _doc_replay_build(spark, sf_dir, out)
-
-
-def _doc_replay_build(spark: SparkSession, sf_dir: str, out: str) -> str:
-    from ..streaming.replay import _stamp_mtimes
-
-    if os.path.isfile(os.path.join(out, "_READY")):
-        return out
-    d = load_table(spark, sf_dir, "documents")
-    d.repartitionByRange(_N_DOC_FILES, "doc_id").sortWithinPartitions(
-        "doc_id"
-    ).write.mode("overwrite").parquet(out)
-    _stamp_mtimes(out)
-    with open(os.path.join(out, "_READY"), "w") as fh:
-        fh.write("ok")
-    from .scans import track_scratch
-
-    track_scratch(out)
-    return out
+    docs = os.path.join(sf_dir, "documents.parquet")
+    return derived_dir(spark, "docs_replay", [docs], build)
 
 
 def _sketch(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -132,7 +107,7 @@ def _sketch(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     CAT_STREAM,
     # drained incremental pairs ≡ the batch detector's full pair set —
     # the oracle IS llm_dedup_near's registered SQL
-    REGISTRY["llm_dedup_near"].oracle,
+    NEAR_ORACLE,
 )
 def stream_dedup_near_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-duplicate detection: the corpus arrives as a
@@ -156,8 +131,6 @@ def stream_dedup_near_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     (not executor memory/state store) — band keys are 16-byte hashes,
     uniformly partitionable; at scale the candidate probe is a bucketed
     join against the index partitioned by band."""
-    from .scans import scratch_dir
-
     src = _doc_replay_dir(spark, sf_dir)
     schema = load_table(spark, sf_dir, "documents").schema
     idx_bands = scratch_dir("neardup_idx_bands_")

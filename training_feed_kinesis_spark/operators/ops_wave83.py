@@ -27,14 +27,15 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..session import scoped_conf
+from ..streaming.replay import _ckpt_dir, _stamp_mtimes, sentinel_events
 from ..tables import load_table
+from .scans import derived_dir
 
 CAT_STREAM = "2.I streaming"
 CAT_EV = "2.L event analytics"
@@ -44,82 +45,32 @@ N_BATCHES = 4
 
 def _mod4_replay(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic interleaved replay: batch b = {event_id % 4 == b},
-    one parquet file per batch in mtime order, plus a far-future
-    sentinel file stamped last. Unlike replay.py's range-partitioned
-    variants, the batch assignment is a pure function of event_id, so
-    batch contents are restatable in SQL. Cached per sf under a _READY
-    marker (replay.py's discipline)."""
-    from .scans import SCRATCH
+    one parquet file per batch in mtime order, plus the replay sentinel
+    file stamped last. Unlike replay.py's range-partitioned variants, the
+    batch assignment is a pure function of event_id, so batch contents
+    are restatable in SQL. Built once per session (scans.derived_dir)."""
 
-    sf_tag = sf_dir.strip("/").split("/")[-1].replace(".", "_")
-    # content-keyed cache tag (replay._prepare / ADVICE r5 discipline): a
-    # name-only key serves a STALE copy when a fixture dir is rebuilt in
-    # place (caught by the r12 temporal-campaign resweep)
-    try:
-        _st = os.stat(os.path.join(sf_dir, "events.parquet"))
-        sf_tag += f"_{_st.st_mtime_ns}_{_st.st_size}"
-    except OSError:
-        pass
-    # session-scoped (r12 optimization-round contract): derived-from-testdata
-    # fixture dirs must not outlive the process that built them
-    sf_tag += f"_{spark.sparkContext.applicationId}"
-    out = os.path.join(SCRATCH, f"replay_mod4_{sf_tag}")
-    from .scans import FIXTURE_LOCK
+    def build(out: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        batches = [
+            ev.filter(F.col("event_id") % N_BATCHES == b) for b in range(N_BATCHES)
+        ]
+        for b, df in enumerate([*batches, sentinel_events(spark)]):
+            # one file per batch: write to a hidden (_-prefixed, skipped by
+            # the file source) temp dir inside out, then move the part up
+            tmp = os.path.join(out, f"_b{b}")
+            df.coalesce(1).write.parquet(tmp)
+            part = next(
+                f for f in os.listdir(tmp)
+                if f.startswith("part-") and f.endswith(".parquet")
+            )
+            dst = os.path.join(out, f"part-{b:05d}.parquet")
+            os.replace(os.path.join(tmp, part), dst)
+            shutil.rmtree(tmp)
+        _stamp_mtimes(out)
 
-    with FIXTURE_LOCK:
-        return _mod4_replay_build(spark, sf_dir, out, sf_tag)
-
-
-def _mod4_replay_build(spark, sf_dir, out, sf_tag):
-    from .scans import SCRATCH
-
-    if os.path.isfile(os.path.join(out, "_READY")):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    ev = load_table(spark, sf_dir, "events")
-    base = time.time() - 86400
-    for b in range(N_BATCHES):
-        tmp = os.path.join(SCRATCH, f"replay_mod4_{sf_tag}_b{b}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        ev.filter(F.col("event_id") % N_BATCHES == b).coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dst = os.path.join(out, f"batch-{b}.parquet")
-        shutil.copy(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + b * 2, base + b * 2))
-        shutil.rmtree(tmp, ignore_errors=True)
-    sent = spark.createDataFrame(
-        [(-1, "2025-06-01 00:00:00", -1, "sentinel", 0.0, "{}")],
-        "event_id long, ts_s string, user_id long, event_type string,"
-        " value double, props string",
-    ).select(
-        "event_id",
-        F.col("ts_s").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    tmp = os.path.join(SCRATCH, f"replay_mod4_{sf_tag}_sent")
-    shutil.rmtree(tmp, ignore_errors=True)
-    sent.coalesce(1).write.parquet(tmp)
-    part = next(
-        f for f in os.listdir(tmp)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    dst = os.path.join(out, "batch-9-sentinel.parquet")
-    shutil.copy(os.path.join(tmp, part), dst)
-    os.utime(dst, (base + 100, base + 100))
-    shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(out, "_READY"), "w") as fh:
-        fh.write("ok")
-    from .scans import track_scratch
-
-    track_scratch(out)
-    return out
+    events = os.path.join(sf_dir, "events.parquet")
+    return derived_dir(spark, "replay_mod4", [events], build)
 
 
 @register("stream_watermark_gap_census", CAT_STREAM)  # rows-only: engine-behavior census
@@ -152,8 +103,6 @@ def stream_watermark_gap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    from ..streaming.replay import _ckpt_dir
-
     name = f"tfk_wm_gap_{abs(hash(sf_dir)) % 10_000}"
     writer = (
         agg.writeStream.format("memory")

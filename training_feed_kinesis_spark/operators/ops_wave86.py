@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from .exact import CENTS_SUM_SQL, cents_sum
 from ..tables import load_table
-from .scans import SCRATCH
+from .scans import derived_dir
 
 # exact integer-cents SUM of events.value, unrounded (r11 projected-
 # magnitude lint, SURVEY 5.3.9a): total_value is a SUM-driven grower
@@ -66,29 +66,20 @@ def scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the relational filter, which is what the oracle states.
 
     Scale shape: listing-time pruning + map-combinable aggregate; the
-    write is the fixture, cached per sf."""
-    sf_tag = sf_dir.strip("/").split("/")[-1].replace(".", "_")
-    # content-keyed cache tag (replay._prepare / ADVICE r5 discipline): a
-    # name-only key serves a STALE copy when a fixture dir is rebuilt in
-    # place (caught by the r12 temporal-campaign resweep)
-    try:
-        _st = os.stat(os.path.join(sf_dir, "events.parquet"))
-        sf_tag += f"_{_st.st_mtime_ns}_{_st.st_size}"
-    except OSError:
-        pass
-    base = os.path.join(SCRATCH, f"nested_events_{sf_tag}")
-    marker = os.path.join(base, "_READY")
-    if not os.path.isfile(marker):
+    write is the fixture, built once per session (scans.derived_dir)."""
+
+    def build(out: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         for et in ("click", "view", "purchase", "signup", "error"):
             (
                 ev.filter(F.col("event_type") == et)
                 .coalesce(1)
                 .write.mode("overwrite")
-                .parquet(os.path.join(base, f"type={et}"))
+                .parquet(os.path.join(out, f"type={et}"))
             )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    events = os.path.join(sf_dir, "events.parquet")
+    base = derived_dir(spark, "nested_events", [events], build)
     schema = load_table(spark, sf_dir, "events").schema
     back = (
         spark.read.schema(schema)

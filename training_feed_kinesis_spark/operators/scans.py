@@ -8,8 +8,12 @@ At cluster scale the loader swaps to partitioned catalog tables (tables.py).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import tempfile
+import threading
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,13 +39,10 @@ SCRATCH = os.environ.get(
 # run's atexit, never an exception during teardown).
 _SESSION_SCRATCH: list[str] = []
 
-# Serializes _READY-guarded scratch-fixture builds (replay dirs, derived
-# parquet fixtures) so concurrent driver threads — the test suite builds
-# registry plans from a thread pool (guide §2.6) — cannot interleave two
-# writers into one dir. RLock: a fixture builder may itself prepare a
-# nested fixture. Coarse by design; builds happen once per session.
-import threading
-
+# Serializes derived_dir builds so concurrent driver threads — the test
+# suite builds registry plans from a thread pool (guide §2.6) — cannot
+# interleave two writers into one dir. RLock: a build may itself request
+# a nested derived dir. Coarse by design; builds happen once per session.
 FIXTURE_LOCK = threading.RLock()
 
 
@@ -49,7 +50,6 @@ def track_scratch(path: str) -> str:
     """Register a scratch path for removal when this process exits."""
     if not _SESSION_SCRATCH:
         import atexit
-        import shutil
 
         def _cleanup() -> None:
             for p in _SESSION_SCRATCH:
@@ -63,6 +63,44 @@ def track_scratch(path: str) -> str:
 def scratch_dir(prefix: str) -> str:
     os.makedirs(SCRATCH, exist_ok=True)
     return track_scratch(tempfile.mkdtemp(prefix=prefix, dir=SCRATCH))
+
+
+def derived_dir(
+    spark: SparkSession,
+    name: str,
+    inputs: Sequence[str],
+    build: Callable[[str], object],
+) -> str:
+    """Build a scratch fixture derived from the ``inputs`` paths once, and
+    return its dir.
+
+    The dir is keyed on ``name``, the session's applicationId and the
+    ``(abspath, st_mtime_ns, st_size)`` of every input: rewriting an input
+    in place yields a new dir, and no dir outlives the process that built
+    it (it is removed at exit). ``build(out)`` fills the existing, empty
+    ``out``; a ``_READY`` marker written after it returns guards against
+    serving a partial build."""
+    key: list = [name, spark.sparkContext.applicationId]
+    for path in map(os.path.abspath, inputs):
+        try:
+            st = os.stat(path)
+            key.append((path, st.st_mtime_ns, st.st_size))
+        except OSError:
+            key.append((path, None, None))
+    digest = hashlib.sha1(repr(key).encode()).hexdigest()[:16]
+    out = os.path.join(SCRATCH, f"{name}_{digest}")
+    ready = os.path.join(out, "_READY")
+    if os.path.isfile(ready):
+        return out
+    with FIXTURE_LOCK:
+        if not os.path.isfile(ready):
+            shutil.rmtree(out, ignore_errors=True)
+            os.makedirs(out)
+            track_scratch(out)
+            build(out)
+            with open(ready, "w") as fh:
+                fh.write("ok")
+    return out
 
 
 @register("scan_parquet", CAT, "SELECT * FROM part")

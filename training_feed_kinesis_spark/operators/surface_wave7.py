@@ -18,8 +18,6 @@ BASELINE.json:6.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -28,6 +26,7 @@ from ..registry import register
 from ..session import scoped_conf
 from .exact import CENTS_SUM_SQL, cents_sum
 from ..tables import load_table, release_after
+from .scans import scratch_dir
 
 CAT_AGG = "2.D aggregations"
 CAT_SINK = "2.A scans/sources/sinks"
@@ -187,32 +186,22 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the nightly-restatement primitive: rewrite the late
     partitions in place, never rewrite (or even list) the other 10⁴
     partitions."""
-    from .scans import SCRATCH
-
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(SCRATCH, f"dyn_overwrite_{sf_tag}")
+    out = scratch_dir("dyn_overwrite_")
     # NULL ts dropped on both engines (the r8 NULL-time seam): an
     # undated row would land in the Hive default partition on Spark
     # while the oracle's NOT IN three-valued logic silently drops it
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
     ).select(F.dayofmonth("ts").alias("d"), F.col("value").alias("v"))
-    # the FULL write runs in STATIC mode so it truncates the reused
-    # deterministic dir — under dynamic mode a shrunken/empty corpus
-    # would leave stale day partitions from a previous invocation in
-    # place (code review r6); only the day-5/6 restatement exercises
-    # the dynamic contract under test
-    mode = "spark.sql.sources.partitionOverwriteMode"
-    with scoped_conf(spark, **{mode: "static"}):
-        ev.write.mode("overwrite").partitionBy("d").parquet(out)
-        with scoped_conf(spark, **{mode: "dynamic"}):
-            (
-                ev.filter(F.col("d").isin(5, 6))
-                .withColumn("v", F.col("v") * 2)
-                .write.mode("overwrite")
-                .partitionBy("d")
-                .parquet(out)
-            )
+    ev.write.mode("overwrite").partitionBy("d").parquet(out)
+    with scoped_conf(spark, **{"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
+        (
+            ev.filter(F.col("d").isin(5, 6))
+            .withColumn("v", F.col("v") * 2)
+            .write.mode("overwrite")
+            .partitionBy("d")
+            .parquet(out)
+        )
     # explicit schema: an EMPTY input writes no partition dirs and
     # schema inference would fail (empty-corpus census r6)
     back = spark.read.schema(ev.schema).parquet(out)

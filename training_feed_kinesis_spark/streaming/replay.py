@@ -30,17 +30,18 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.scans import scratch_dir
+from ..operators.scans import derived_dir, scratch_dir, track_scratch
 from ..session import scoped_conf
 from ..tables import load_table
 
 N_REPLAY_FILES = 4
 
-_prepared: dict[tuple, str] = {}
 _qcounter = itertools.count()
 
 
@@ -48,12 +49,10 @@ def _stamp_mtimes(path: str, base_offset: int = 0) -> int:
     """Assign strictly-increasing mtimes (2s apart) to parquet part files in
     part-name order, so FileStreamSource's mtime ordering equals the intended
     replay order. Returns the number of files stamped."""
-    import time as _time
-
     parts = sorted(
         f for f in os.listdir(path) if f.startswith("part-") and not f.endswith(".crc")
     )
-    base = _time.time() - 86400  # yesterday: never in the future
+    base = time.time() - 86400  # yesterday: never in the future
     for i, f in enumerate(parts):
         t = base + (base_offset + i) * 2
         os.utime(os.path.join(path, f), (t, t))
@@ -61,84 +60,35 @@ def _stamp_mtimes(path: str, base_offset: int = 0) -> int:
 
 
 def _prepare(spark: SparkSession, sf_dir: str, variant: str) -> str:
-    """Write the replay files once per (session, sf_dir, variant); return
-    source dir.
+    """Write the replay files of ``variant`` once per session and
+    events.parquet content (``scans.derived_dir``); return the source dir.
+    Checkpoints are never reused (each drain gets a fresh one)."""
 
-    The replay content is a deterministic function of (events.parquet,
-    variant); the directory is cached per SESSION (applicationId in the
-    path — see the r12 note below) — a `_READY` marker written after the
-    mtime stamping guards against reusing a partial dir from a crashed
-    writer racing a concurrent builder in the same session. Checkpoints are
-    never reused (each drain gets a fresh one)."""
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    if key in _prepared and os.path.isdir(_prepared[key]):
-        return _prepared[key]
-    from ..operators.scans import FIXTURE_LOCK
+    def build(out: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        if variant == "ordered":
+            df = ev.repartitionByRange(N_REPLAY_FILES, "ts").sortWithinPartitions("ts")
+        elif variant == "shuffled":
+            # range-partition on a time-uncorrelated key → each file spans the
+            # whole time range → later batches carry events older than the
+            # watermark established by earlier batches
+            df = ev.withColumn("_k", F.xxhash64("event_id")).repartitionByRange(
+                N_REPLAY_FILES, "_k"
+            ).drop("_k")
+        elif variant == "doubled":
+            df = (
+                ev.withColumn("_copy", F.lit(0))
+                .unionByName(ev.withColumn("_copy", F.lit(1)))
+                .repartitionByRange(N_REPLAY_FILES, "_copy", "ts")
+                .drop("_copy")
+            )
+        else:
+            raise ValueError(f"unknown replay variant: {variant}")
+        df.write.mode("overwrite").parquet(out)
+        _stamp_mtimes(out)
 
-    with FIXTURE_LOCK:
-        return _prepare_locked(spark, sf_dir, variant, key)
-
-
-def _prepare_locked(spark, sf_dir, variant, key):
-    if key in _prepared and os.path.isdir(_prepared[key]):
-        return _prepared[key]
-    sf_tag = sf_dir.strip("/").split("/")[-1].replace(".", "_")
-    # SESSION-scoped (r12 optimization-round contract): the replay source is
-    # derived from events.parquet, so a dir that outlives the process would
-    # be a persisted intermediate keyed on the test data — a later bench or
-    # verify invocation must rebuild it from the parquet inputs, not find it
-    # pre-built by an earlier one. Within one process (one pytest session,
-    # one bench run) reuse is unchanged.
-    sf_tag += f"_{spark.sparkContext.applicationId}"
-    # the cache key must identify the CONTENT, not just the dir name:
-    # pytest tmp fixture dirs reuse names across sessions (nullsf0, ...)
-    # while their generated corruption changes — a name-only key once
-    # replayed a previous session's events for a same-named fixture dir
-    # mtime at NANOSECOND granularity: two fixture generations within the
-    # same second with equal sizes (plausible for fixed-row deterministic
-    # corruption fixtures) must not collide (ADVICE r5)
-    try:
-        st = os.stat(os.path.join(sf_dir, "events.parquet"))
-        sf_tag += f"_{st.st_mtime_ns}_{st.st_size}"
-    except OSError:
-        pass
-    from ..operators.scans import SCRATCH
-
-    stable = os.path.join(SCRATCH, f"replay_cache_{variant}_{sf_tag}")
-    if os.path.isfile(os.path.join(stable, "_READY")):
-        _prepared[key] = stable
-        return stable
-    ev = load_table(spark, sf_dir, "events")
-    out = stable
-    if variant == "ordered":
-        df = ev.repartitionByRange(N_REPLAY_FILES, "ts").sortWithinPartitions("ts")
-    elif variant == "shuffled":
-        # range-partition on a time-uncorrelated key → each file spans the
-        # whole time range → later batches carry events older than the
-        # watermark established by earlier batches
-        df = ev.withColumn("_k", F.xxhash64("event_id")).repartitionByRange(
-            N_REPLAY_FILES, "_k"
-        ).drop("_k")
-    elif variant == "doubled":
-        df = (
-            ev.withColumn("_copy", F.lit(0))
-            .unionByName(ev.withColumn("_copy", F.lit(1)))
-            .repartitionByRange(N_REPLAY_FILES, "_copy", "ts")
-            .drop("_copy")
-        )
-    else:
-        raise ValueError(f"unknown replay variant: {variant}")
-    df.write.mode("overwrite").parquet(out)
-    _stamp_mtimes(out)
-    with open(os.path.join(out, "_READY"), "w") as f:
-        f.write("ok")
-    # session-suffixed dir names never hit again after this process dies —
-    # remove them at exit instead of accumulating under SCRATCH (ADVICE r12)
-    from ..operators.scans import track_scratch
-
-    track_scratch(out)
-    _prepared[key] = out
-    return out
+    events = os.path.join(sf_dir, "events.parquet")
+    return derived_dir(spark, f"replay_{variant}", [events], build)
 
 
 def replay_stream(
@@ -160,37 +110,10 @@ def replay_stream(
     )
 
 
-_sentineled: dict[str, str] = {}
-
-
-def _with_sentinel(spark: SparkSession, src: str) -> str:
-    if src in _sentineled:
-        return _sentineled[src]
-    from ..operators.scans import FIXTURE_LOCK
-
-    with FIXTURE_LOCK:
-        return _with_sentinel_locked(spark, src)
-
-
-def _with_sentinel_locked(spark: SparkSession, src: str) -> str:
-    if src in _sentineled:
-        return _sentineled[src]
-    import shutil
-
-    from ..operators.scans import SCRATCH
-
-    out = os.path.join(SCRATCH, f"{os.path.basename(src)}_sent")
-    if os.path.isfile(os.path.join(out, "_READY")):
-        _sentineled[src] = out
-        return out
-    os.makedirs(out, exist_ok=True)
-    # byte-copy part files (preserving names ⇒ preserving time order); a
-    # Spark re-write would pack input files by size and scramble the ranges
-    for f in sorted(os.listdir(src)):
-        if f.startswith("part-"):
-            shutil.copy(os.path.join(src, f), os.path.join(out, f))
-    n_data = _stamp_mtimes(out)
-    sent = spark.createDataFrame(
+def sentinel_events(spark: SparkSession) -> DataFrame:
+    """The one far-future marker row (user_id=-1, ts=2025-06-01) in the
+    events schema."""
+    return spark.createDataFrame(
         [(-1, "2025-06-01 00:00:00", -1, "sentinel", 0.0, "{}")],
         "event_id long, ts_s string, user_id long, event_type string, value double, props string",
     ).select(
@@ -201,22 +124,28 @@ def _with_sentinel_locked(spark: SparkSession, src: str) -> str:
         "value",
         "props",
     )
-    # append the sentinel, then stamp it strictly later than every data file
-    before = set(os.listdir(out))
-    sent.coalesce(1).write.mode("append").parquet(out)
-    import time as _time
 
-    t = _time.time() - 86400 + (n_data + 100) * 2
-    for f in set(os.listdir(out)) - before:
-        if f.startswith("part-") and not f.endswith(".crc"):
-            os.utime(os.path.join(out, f), (t, t))
-    with open(os.path.join(out, "_READY"), "w") as fh:
-        fh.write("ok")
-    from ..operators.scans import track_scratch
 
-    track_scratch(out)
-    _sentineled[src] = out
-    return out
+def _with_sentinel(spark: SparkSession, src: str) -> str:
+    """A copy of the replay dir ``src`` with the sentinel file appended,
+    keyed on ``src`` itself."""
+
+    def build(out: str) -> None:
+        # byte-copy part files (preserving names ⇒ preserving time order); a
+        # Spark re-write would pack input files by size and scramble the ranges
+        for f in sorted(os.listdir(src)):
+            if f.startswith("part-"):
+                shutil.copy(os.path.join(src, f), os.path.join(out, f))
+        n_data = _stamp_mtimes(out)
+        # append the sentinel, then stamp it strictly later than every data file
+        before = set(os.listdir(out))
+        sentinel_events(spark).coalesce(1).write.mode("append").parquet(out)
+        t = time.time() - 86400 + (n_data + 100) * 2
+        for f in set(os.listdir(out)) - before:
+            if f.startswith("part-") and not f.endswith(".crc"):
+                os.utime(os.path.join(out, f), (t, t))
+
+    return derived_dir(spark, "replay_sent", [src], build)
 
 
 def _ckpt_dir() -> str:
@@ -224,8 +153,6 @@ def _ckpt_dir() -> str:
     commits are fsync-heavy and throwaway in this harness. Production
     deployments pass a durable `checkpoint` path instead."""
     import tempfile
-
-    from ..operators.scans import track_scratch
 
     shm = "/dev/shm/tfk_ckpt"
     try:
