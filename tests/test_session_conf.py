@@ -15,7 +15,7 @@ from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.session import scoped_conf
 from training_feed_kinesis_spark.streaming import replay
 
-from .conftest import SF_DIR, scopes_confs
+from .conftest import SF_DIR, assert_matches_oracle, scopes_confs
 
 _KEY = "spark.tfk.test.scoped_conf"
 _PARTS = "spark.sql.shuffle.partitions"
@@ -105,3 +105,19 @@ def test_conf_scoped_keys_leave_session_unchanged(spark):
         if scopes_confs(spec):
             spec.fn(spark, SF_DIR).collect()
     assert spark.conf.getAll == before
+
+
+def test_memory_sink_views_are_dropped_once_read(spark, duck):
+    """Memory-sink queries leave no ``tfk_`` view behind: ``drain``,
+    ``stream_progress_metrics`` and ``stream_watermark_gap_census`` drop
+    theirs once the frame is resolved, and a drained frame still reads."""
+    registry = load_all()
+    for key in ("stream_progress_metrics", "stream_watermark_gap_census"):
+        registry[key].fn(spark, SF_DIR).collect()
+    spec = registry["stream_dedup_watermark"]
+    assert_matches_oracle(spec.fn(spark, SF_DIR), duck, spec.oracle)
+    names = [t.name for t in spark.catalog.listTables()]
+    assert not [
+        n for n in names
+        if n.startswith(("tfk_replay_", "tfk_progress_", "tfk_wm_gap_"))
+    ], names

@@ -150,3 +150,47 @@ def test_sim_lsh_recall_floor_on_planted_pairs(spark, tmp_path):
     got = {(r.a_id, r.b_id) for r in llm_sim_lsh(spark, d).collect()}
     recall = len(got & true_pairs) / len(true_pairs)
     assert recall >= 0.9, f"LSH recall {recall:.2f} over {len(true_pairs)} pairs"
+
+
+def test_embed_stats_mean_rounding_to_zero_has_no_sign(spark, tmp_path):
+    """A per-label mean in (-5e-5, 0) rounds to -0.0 in DuckDB and 0.0 in
+    Spark; both spellings add 0.0 so the cell is 0.0 on both engines.
+    Compared by ``repr``: the shared comparator's ``round(f + 0.0, 6)``
+    would hide the sign."""
+    import duckdb
+
+    from training_feed_kinesis_spark.registry import load_all
+
+    src = f"read_parquet('{SF_DIR}/embeddings.parquet')"
+    duckdb.execute(
+        f"""COPY (SELECT vec_id,
+                  CASE WHEN label = 6
+                       THEN list_transform(embedding, x -> CAST(-0.00002 AS FLOAT))
+                       ELSE embedding END AS embedding,
+                  label
+                FROM {src}) TO '{tmp_path}/embeddings.parquet' (FORMAT PARQUET)"""
+    )
+    spec = load_all()["llm_embed_stats"]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{tmp_path}/embeddings.parquet')"
+    )
+
+    raw = con.execute(
+        "SELECT ROUND(AVG(CAST(embedding[1] AS DOUBLE)), 4)"
+        " FROM embeddings WHERE label = 6"
+    ).fetchone()[0]
+    assert repr(raw) == "-0.0"  # the fixture holds a signed-zero cell
+
+    def cells(rows):
+        return sorted((r[0], r[1], repr(float(r[2])), r[3]) for r in rows)
+
+    expected = cells(
+        con.execute(f"SELECT label, pos, centroid_val, n_vectors FROM ({spec.oracle})").fetchall()
+    )
+    actual = cells(
+        spec.fn(spark, str(tmp_path))
+        .select("label", "pos", "centroid_val", "n_vectors")
+        .collect()
+    )
+    assert actual == expected

@@ -1,6 +1,7 @@
 """r12 optimization-round pins: load_table plan memoization is METADATA
 reuse, never data caching; parallelize's partition probe memo keeps its
-repartition-only-when-needed contract.
+repartition-only-when-needed contract. Every session memo follows an
+in-place rewrite of the tables it was derived from.
 
 The r12 contract the bench runs under: every timed query computes from
 the parquet inputs. load_table may reuse the (lazy) relation plan — the
@@ -9,13 +10,24 @@ never persist/cache the data behind it.
 """
 
 import os
+import pathlib
 import shutil
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
+import duckdb
+import pytest
 from pyspark.storagelevel import StorageLevel
 
-from training_feed_kinesis_spark.tables import load_table, parallelize
+import training_feed_kinesis_spark
+from training_feed_kinesis_spark.operators import llm_dedup
+from training_feed_kinesis_spark.registry import load_all
+from training_feed_kinesis_spark.tables import TABLES, load_table, memo, parallelize
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, assert_matches_oracle
+
+_REGISTRY = load_all()
 
 
 def test_load_table_memoizes_plan_not_data(spark):
@@ -41,6 +53,126 @@ def test_load_table_memo_is_content_keyed(spark, tmp_path):
     b = load_table(spark, str(dst_dir), "region")
     assert a is not b
     assert b.count() == n_a
+
+
+def _sf_copy(tmp_path) -> str:
+    d = tmp_path / "sf"
+    d.mkdir()
+    for t in TABLES:
+        shutil.copy(f"{SF_DIR}/{t}.parquet", d / f"{t}.parquet")
+    return str(d)
+
+
+def _rewrite_in_place(path: str, select: str) -> None:
+    """Overwrite ``path`` with ``select`` run over its current rows
+    (``{src}`` in ``select``), keeping the file (and its inode)."""
+    tmp = f"{path}.new"
+    src = f"read_parquet('{path}')"
+    duckdb.execute(f"COPY ({select.format(src=src)}) TO '{tmp}' (FORMAT PARQUET)")
+    shutil.copyfile(tmp, path)
+    os.remove(tmp)
+
+
+def _oracle_con(sf_dir: str):
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+@pytest.mark.parametrize(
+    "key, table, select",
+    [
+        # shingle_arrays substrate consumer, documents halved
+        pytest.param(
+            "llm_jaccard_pairs", "documents",
+            "SELECT * FROM {src} WHERE doc_id % 2 = 0",
+            id="shingle_arrays",
+        ),
+        # graph edge-list memo consumer, lineitem halved (whole baskets)
+        pytest.param(
+            "graph_degree", "lineitem",
+            "SELECT * FROM {src} WHERE l_orderkey % 2 = 0",
+            id="graph_edges",
+        ),
+        # admitted-embeddings consumer: a clean table gains one re-ingested
+        # vec_id, so the memoized "no duplicates" census verdict is stale
+        pytest.param(
+            "llm_embed_stats", "embeddings",
+            "SELECT * FROM {src} UNION ALL SELECT * FROM {src} WHERE vec_id = 7",
+            id="embeddings_admitted",
+        ),
+    ],
+)
+def test_session_memos_are_content_keyed(spark, tmp_path, key, table, select):
+    """A table rewritten in place mid-session: every session memo derived
+    from the dir (substrates, the admitted embeddings, the graph edges)
+    must follow the new content, not serve what the old content built."""
+    d = _sf_copy(tmp_path)
+    fn, oracle = _REGISTRY[key].fn, _REGISTRY[key].oracle
+    assert_matches_oracle(fn(spark, d), _oracle_con(d), oracle)
+    _rewrite_in_place(f"{d}/{table}.parquet", select)
+    assert_matches_oracle(fn(spark, d), _oracle_con(d), oracle)
+
+
+def _cached_rdd_id(spark, df) -> int:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    cached = cm.lookupCachedData(df._jdf).get().cachedRepresentation()
+    return cached.cacheBuilder().cachedColumnBuffers().id()
+
+
+def test_replaced_substrate_leaves_the_cache_manager(spark, tmp_path):
+    """The substrate a rewrite replaces is unpersisted, not left cached:
+    Spark's CacheManager matches the rebuilt plan over the same path to
+    the old cached data, so a surviving entry would serve stale rows."""
+    d = _sf_copy(tmp_path)
+    old = llm_dedup._shingle_arrays(spark, d)
+    old_id = _cached_rdd_id(spark, old)
+    _rewrite_in_place(f"{d}/documents.parquet", "SELECT * FROM {src} WHERE doc_id % 2 = 0")
+    new = llm_dedup._shingle_arrays(spark, d)
+    assert new is not old
+    assert old_id not in set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert _cached_rdd_id(spark, new) != old_id
+    n_docs = duckdb.execute(
+        f"SELECT COUNT(DISTINCT doc_id) FROM read_parquet('{d}/documents.parquet')"
+    ).fetchone()[0]
+    assert new.count() == n_docs
+
+
+def test_concurrent_memo_requests_build_once(spark, tmp_path):
+    """Eight threads asking for one cold entry share a single build."""
+    calls = []
+    barrier = threading.Barrier(8)
+
+    def build():
+        calls.append(1)
+        time.sleep(0.2)  # keep the build open while the other threads arrive
+        return spark.range(1)
+
+    def request(_):
+        barrier.wait(timeout=30)
+        return memo(spark, str(tmp_path), "t_concurrent", build)
+
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        frames = list(pool.map(request, range(8), timeout=60))
+    assert len(calls) == 1
+    assert all(f is frames[0] for f in frames)
+
+
+def test_application_id_is_read_only_in_tables():
+    """Session scoping has one spelling: ``tables.content_key`` reads the
+    applicationId, and every memo and derived dir keys on it."""
+    root = pathlib.Path(training_feed_kinesis_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "tables.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "applicationId" in line
+    ]
+    assert not hits, hits
 
 
 def test_parallelize_still_widens_single_split_scans(spark):

@@ -30,13 +30,11 @@ capability surface reconstructed per SURVEY.md §2 and BASELINE.json:6.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import MEMO_LOCK, load_table
+from ..tables import load_table, memo
 
 CAT = "2.L graph analytics"
 
@@ -56,25 +54,12 @@ _EDGES_SQL = """
 # The basket self-join that derives the support-thinned pair list is the
 # single most expensive subexpression of the graph/mining family
 # (graph_triangles, graph_degree, graph_pagerank seeds, assoc_rules all
-# start from it). Materialize it once per (session, sf) — the thinned list
-# is small — so consumers share one computation: common-subexpression reuse,
-# the same thing a warehouse's materialized view would do at 100 TB.
-# Keyed and locked like llm_similarity._ADMIT_MEMO: consumers build plans
-# from concurrent driver threads, and each unlocked miss would run the
-# eager checkpoint again.
-_edges_cache: dict[tuple[str, str], DataFrame] = {}
-
-
+# start from it). Materialize it once per (session, table dir content) —
+# the thinned list is small — so consumers share one computation:
+# common-subexpression reuse, the same thing a warehouse's materialized
+# view would do at 100 TB.
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _edges_cache.get(key)
-    if cached is not None:
-        return cached
-    with MEMO_LOCK:
-        cached = _edges_cache.get(key)  # re-check under the lock
-        if cached is None:
-            cached = _edges_cache[key] = _build_edges(spark, sf_dir)
-    return cached
+    return memo(spark, sf_dir, "graph_edges", lambda: _build_edges(spark, sf_dir))
 
 
 def _build_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

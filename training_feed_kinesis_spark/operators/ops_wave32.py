@@ -132,6 +132,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
         q = writer.start()
     q.awaitTermination()
+    spark.catalog.dropTempView(name)  # only the progress events are read
     # recentProgress retains every micro-batch of this short run; sum the
     # source-reported input rows — the number a dashboard reconciles
     total_in = sum(p["numInputRows"] for p in q.recentProgress)

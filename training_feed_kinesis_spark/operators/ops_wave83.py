@@ -25,6 +25,7 @@ BASELINE.json:6.
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 
@@ -39,6 +40,8 @@ from .scans import derived_dir
 
 CAT_STREAM = "2.I streaming"
 CAT_EV = "2.L event analytics"
+
+_qc = itertools.count()  # memory-sink query names
 
 N_BATCHES = 4
 
@@ -103,7 +106,7 @@ def stream_watermark_gap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"tfk_wm_gap_{abs(hash(sf_dir)) % 10_000}"
+    name = f"tfk_wm_gap_{next(_qc)}"
     writer = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -127,6 +130,7 @@ def stream_watermark_gap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.coalesce(F.sum("n"), F.lit(0)))
         .collect()[0][0]
     )
+    spark.catalog.dropTempView(name)
     real_inputs = input_rows - 1  # sentinel
     gap = real_inputs - emitted - dropped
     return spark.createDataFrame(

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import register
-from ..tables import load_table
+from ..tables import content_key, load_table
 
 CAT = "2.A scans/sources/sinks"
 
@@ -74,19 +74,12 @@ def derived_dir(
     """Build a scratch fixture derived from the ``inputs`` paths once, and
     return its dir.
 
-    The dir is keyed on ``name``, the session's applicationId and the
-    ``(abspath, st_mtime_ns, st_size)`` of every input: rewriting an input
-    in place yields a new dir, and no dir outlives the process that built
-    it (it is removed at exit). ``build(out)`` fills the existing, empty
-    ``out``; a ``_READY`` marker written after it returns guards against
-    serving a partial build."""
-    key: list = [name, spark.sparkContext.applicationId]
-    for path in map(os.path.abspath, inputs):
-        try:
-            st = os.stat(path)
-            key.append((path, st.st_mtime_ns, st.st_size))
-        except OSError:
-            key.append((path, None, None))
+    The dir is keyed on ``name`` and the ``tables.content_key`` of the
+    inputs: rewriting an input in place yields a new dir, and no dir
+    outlives the process that built it (it is removed at exit).
+    ``build(out)`` fills the existing, empty ``out``; a ``_READY`` marker
+    written after it returns guards against serving a partial build."""
+    key = (name, content_key(spark, inputs))
     digest = hashlib.sha1(repr(key).encode()).hexdigest()[:16]
     out = os.path.join(SCRATCH, f"{name}_{digest}")
     ready = os.path.join(out, "_READY")

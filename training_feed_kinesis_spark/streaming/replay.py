@@ -223,4 +223,7 @@ def drain(
         q = writer.start()
     q.awaitTermination()
     LAST_PROGRESS = q.lastProgress
-    return spark.table(name)
+    # the resolved frame keeps the sink's data; the view is only its name
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out

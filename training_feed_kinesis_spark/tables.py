@@ -92,26 +92,34 @@ def sane_ts_sql(col: str) -> str:
     )
 
 
-# Plan memo (r12): (applicationId, path, mtime_ns, size) -> the lazy,
-# UNCACHED post-normalization DataFrame. METADATA/plan reuse only — every
-# action over the returned frame re-reads the parquet (no .cache(), no
+def content_key(spark: SparkSession, paths) -> tuple:
+    """The session's applicationId plus ``(abspath, st_mtime_ns, st_size)``
+    of each path (``(path, None, None)`` if it cannot be stat-ed): the key
+    every session memo and derived scratch dir is tied to.
+
+    SINGLE-FILE-SNAPSHOT ASSUMPTION (ADVICE r12): every table here is one
+    parquet FILE, whose stat changes on any rewrite. A DIRECTORY dataset's
+    stat does not reliably change when a part file does — fold the max
+    child (mtime_ns, size) in here before making that move."""
+    stamp: list = [spark.sparkContext.applicationId]
+    for path in map(os.path.abspath, paths):
+        try:
+            st = os.stat(path)
+            stamp.append((path, st.st_mtime_ns, st.st_size))
+        except OSError:
+            stamp.append((path, None, None))
+    return tuple(stamp)
+
+
+# Plan memo (r12): content_key of the table file -> the lazy, UNCACHED
+# post-normalization DataFrame. METADATA/plan reuse only — every action
+# over the returned frame re-reads the parquet (no .cache(), no
 # materialization). Motivation: spark.read.parquet does an eager
 # driver-side footer read + file listing per call (~60-90 ms of py4j +
 # I/O), and the headline bench constructs several hundred table frames per
 # run, so relation construction alone was multi-second driver overhead.
 # At 100 TB this memo is the table catalog (HMS/Iceberg), which serves
-# exactly this metadata. Content-keyed on (mtime_ns, size) like the replay
-# caches, so an in-place fixture rewrite misses cleanly; applicationId in
-# the key scopes it to one session (DataFrame plans are session-bound).
-#
-# SINGLE-FILE-SNAPSHOT ASSUMPTION (ADVICE r12): the content key is the
-# os.stat of ``{name}.parquet`` itself. Every table in this repo is one
-# parquet FILE, for which mtime_ns/size changes on any rewrite. If a
-# table ever becomes a DIRECTORY dataset, adding/replacing a part file
-# does not reliably bump the directory's stat and a stale memoized
-# relation (resolved file listing + schema) could be served — fold the
-# max child (mtime_ns, size) into the key before making that move (same
-# immutable-snapshot contract as ``substrate`` below).
+# exactly this metadata.
 _TABLE_PLAN_MEMO: dict = {}
 
 
@@ -119,16 +127,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table, applying required session confs + load-time fixes."""
     configure(spark)
     path = f"{sf_dir}/{name}.parquet"
-    skey = None
-    try:
-        st = os.stat(path)
-        skey = (
-            spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size
-        )
-    except OSError:
-        pass
-    if skey and skey in _TABLE_PLAN_MEMO:
-        return _TABLE_PLAN_MEMO[skey]
+    key = content_key(spark, [path])
+    df = _TABLE_PLAN_MEMO.get(key)
+    if df is not None:
+        return df
     df = spark.read.parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
@@ -142,8 +144,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # NTZ ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]). Session tz is pinned
             # UTC, so the cast is wall-clock-preserving and DuckDB parity holds.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    if skey:
-        _TABLE_PLAN_MEMO[skey] = df
+    _TABLE_PLAN_MEMO[key] = df
     return df
 
 
@@ -222,19 +223,41 @@ def release_after(result: DataFrame, *cached: DataFrame) -> DataFrame:
     return result
 
 
-# (applicationId, resolved dir, substrate name) -> cached DataFrame.
+# (applicationId, resolved dir, name) -> (content_key of the dir's TABLES
+# files, DataFrame): the one session memo behind every shared derived
+# relation — substrates, the admitted embeddings, the graph edge list.
 # Deliberately session-lived and BOUNDED: one entry per distinct table
-# dir per substrate — a handful of sketch/basket relations, each far
-# smaller than its source table. This is the enumerated replacement for
-# the r7 cache-residue class, where every operator invocation left its
-# own anonymous cached relation in the CacheManager.
-_SUBSTRATE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# dir per name — a handful of sketch/basket relations, each far smaller
+# than its source table. This is the enumerated replacement for the r7
+# cache-residue class, where every operator invocation left its own
+# anonymous cached relation in the CacheManager.
+_SUBSTRATE_MEMO: dict[tuple[str, str, str], tuple[tuple, DataFrame]] = {}
 
-# Guards cached-relation memo builds against concurrent driver threads
-# (the test suite builds registry plans from a pool, guide §2.6): an
-# unlocked race double-builds and double-CACHES the relation, and the
-# losing cache entry is never unpersisted — the r7 residue class.
+# Guards memo builds against concurrent driver threads (the test suite
+# builds registry plans from a pool, guide §2.6): an unlocked race
+# double-builds and double-CACHES the relation, and the losing cache
+# entry is never unpersisted — the r7 residue class.
 MEMO_LOCK = threading.RLock()
+
+
+def memo(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
+    """``build()``'s frame for ``name`` over ``sf_dir`` in this session,
+    rebuilt when any TABLES file in ``sf_dir`` changes (their content_key
+    stamps the entry: ~10 ``stat`` calls per lookup, no inputs to name).
+    A replaced frame is unpersisted first, because Spark's CacheManager
+    would match the rebuilt plan over the same path to the stale cached
+    data. ``build`` picks its own materialization."""
+    stamp = content_key(spark, [f"{sf_dir}/{t}.parquet" for t in TABLES])
+    key = (stamp[0], os.path.abspath(sf_dir), name)
+    hit = _SUBSTRATE_MEMO.get(key)
+    if hit is None or hit[0] != stamp:
+        with MEMO_LOCK:
+            hit = _SUBSTRATE_MEMO.get(key)  # re-check under the lock
+            if hit is None or hit[0] != stamp:
+                if hit is not None:
+                    hit[1].unpersist(False)
+                hit = _SUBSTRATE_MEMO[key] = (stamp, build())
+    return hit[1]
 
 
 def substrate(spark: SparkSession, sf_dir: str, name: str, builder) -> DataFrame:
@@ -242,28 +265,18 @@ def substrate(spark: SparkSession, sf_dir: str, name: str, builder) -> DataFrame
 
     Expensive derived relations consumed by several operators — LSH band
     signatures, shingle-set arrays, market baskets — are built ONCE per
-    (session, table dir), cached, eagerly materialized (concurrent
-    stages of one job must not race a cold cache), and shared by every
-    consumer and every repeated invocation. At 100 TB this is exactly
-    "materialize the sketch table to storage at ingest, let queries scan
-    it"; in one JVM the memo is the storage. Unlike the per-invocation
-    ``.cache()`` it replaces, the footprint is bounded and enumerable:
-    len(_SUBSTRATE_MEMO) relations, not one per operator call.
+    (session, table dir content) through :func:`memo`, cached, eagerly
+    materialized (concurrent stages of one job must not race a cold
+    cache), and shared by every consumer and every repeated invocation.
+    At 100 TB this is exactly "materialize the sketch table to storage at
+    ingest, let queries scan it"; in one JVM the memo is the storage.
+    Unlike the per-invocation ``.cache()`` it replaces, the footprint is
+    bounded and enumerable: len(_SUBSTRATE_MEMO) relations, not one per
+    operator call."""
 
-    IMMUTABLE-TABLE-DIR ASSUMPTION (r8 ADVICE): the cached relation is
-    keyed on the dir path only — a rewrite of the parquet UNDER the same
-    dir mid-session serves the stale substrate (and Spark's own
-    CacheManager would too). A table dir is a write-once snapshot;
-    re-ingest means a new dir. Tests build fresh dirs per corruption
-    fixture for exactly this reason (same contract as
-    llm_similarity._ADMIT_MEMO)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    df = _SUBSTRATE_MEMO.get(key)
-    if df is None:
-        with MEMO_LOCK:
-            df = _SUBSTRATE_MEMO.get(key)  # re-check under the lock
-            if df is None:
-                df = builder().cache()
-                df.count()
-                _SUBSTRATE_MEMO[key] = df
-    return df
+    def build() -> DataFrame:
+        df = builder().cache()
+        df.count()
+        return df
+
+    return memo(spark, sf_dir, name, build)
