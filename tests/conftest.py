@@ -46,9 +46,9 @@ def registry_frames(spark):
     replay. Built once, and built from a driver THREAD POOL (guide §2.6
     overlap — schema analysis is driver-side py4j that releases the GIL,
     and the drain-executing keys spend their time waiting on micro-
-    batches, so 8 workers overlap well). Fixture builders and substrate
-    memos are lock-guarded for exactly this concurrency
-    (scans.FIXTURE_LOCK / tables.MEMO_LOCK)."""
+    batches; one worker per task slot, ``SPARK_GRAFT_CPUS``). Fixture
+    builders and substrate memos are lock-guarded for exactly this
+    concurrency (scans.FIXTURE_LOCK / tables.MEMO_LOCK)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from training_feed_kinesis_spark.registry import load_all
@@ -74,7 +74,7 @@ def registry_frames(spark):
     pooled = [i for i in items if not scopes_confs(i[1])]
     serial = [i for i in items if scopes_confs(i[1])]
     frames = {}
-    with ThreadPoolExecutor(max_workers=8) as pool:
+    with ThreadPoolExecutor(max_workers=int(os.environ["SPARK_GRAFT_CPUS"])) as pool:
         for key, df, err in pool.map(build, pooled):
             frames[key] = (df, err)
     for item in serial:

@@ -1,19 +1,25 @@
 """Session-conf isolation: ``session.scoped_conf`` is the one way the engine
 changes a session conf, it restores exactly, and no operator leaves the
-driver's session changed."""
+driver's session changed. Also: ``replay.start_stream`` is the one place
+that sizes a stateful stream's state partitions."""
 
 from __future__ import annotations
 
+import ast
+import os
 import pathlib
 import re
+import sys
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.conf import RuntimeConfig
 
 import training_feed_kinesis_spark
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.session import scoped_conf
 from training_feed_kinesis_spark.streaming import replay
+from training_feed_kinesis_spark.tables import load_table
 
 from .conftest import SF_DIR, assert_matches_oracle, scopes_confs
 
@@ -121,3 +127,160 @@ def test_memory_sink_views_are_dropped_once_read(spark, duck):
         n for n in names
         if n.startswith(("tfk_replay_", "tfk_progress_", "tfk_wm_gap_"))
     ], names
+
+
+def _one_wave(spark) -> int:
+    return min(8, spark.sparkContext.defaultParallelism)
+
+
+def _state_partitions(history) -> set:
+    """Every stateful operator's partition count over a progress history."""
+    return {
+        op["numShufflePartitions"] for p in history for op in p["stateOperators"]
+    }
+
+
+@pytest.fixture
+def started(monkeypatch):
+    """The queries ``replay.start_stream`` starts while the test runs,
+    whichever module-level name the caller reached it through."""
+    queries = []
+    real = replay.start_stream
+
+    def spy(*args, **kwargs):
+        queries.append(real(*args, **kwargs))
+        return queries[-1]
+
+    for module in list(sys.modules.values()):
+        if (
+            getattr(module, "__name__", "").startswith(training_feed_kinesis_spark.__name__)
+            and getattr(module, "start_stream", None) is real
+        ):
+            monkeypatch.setattr(module, "start_stream", spy)
+    return queries
+
+
+def test_stateful_streams_run_one_wave_of_state_partitions(spark, started):
+    """A default drain and the streaming keys that used to pick their own
+    count (or none) run every stateful operator on
+    ``min(8, defaultParallelism)`` state partitions: one wave of tasks."""
+    want = {_one_wave(spark)}
+    assert _state_partitions(replay.progress(replay.drain(_window_counts(spark)))) == want
+    registry = load_all()
+    for key in (
+        "stream_dedup_watermark",
+        "stream_progress_metrics",
+        "stream_watermark_gap_census",
+        "stream_output_modes",
+    ):
+        n_before = len(started)
+        registry[key].fn(spark, SF_DIR).collect()
+        queries = started[n_before:]
+        assert queries, f"{key} started no stream through start_stream()"
+        for q in queries:
+            assert _state_partitions(q.recentProgress) == want, key
+
+
+def test_explicit_state_partitions_are_honoured(spark):
+    out = replay.drain(_window_counts(spark), state_partitions=3)
+    assert _state_partitions(replay.progress(out)) == {3}
+
+
+def test_drain_progress_history_has_one_entry_per_batch(spark):
+    """One file per micro-batch: the history holds each batch once, in
+    order, and ends at the query's last progress."""
+    out = replay.drain(_window_counts(spark))
+    history = replay.progress(out)
+    assert [p["batchId"] for p in history] == list(range(len(history)))
+    assert history[-1]["batchId"] == replay.LAST_PROGRESS["batchId"]
+    files = [
+        f for f in os.listdir(replay._prepare(spark, SF_DIR, "ordered"))
+        if f.startswith("part-") and not f.endswith(".crc")
+    ]
+    assert len([p for p in history if p["numInputRows"] > 0]) == len(files)
+    events = load_table(spark, SF_DIR, "events").count()
+    assert sum(p["numInputRows"] for p in history) == events
+
+
+def _string_constants(node, assigned) -> set:
+    """String constants inside ``node``, following names bound at module
+    level (``scoped_conf(spark, **_CONFS)``)."""
+    out = set()
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Constant) and isinstance(sub.value, str):
+            out.add(sub.value)
+        elif isinstance(sub, ast.Name) and sub.id in assigned:
+            out |= _string_constants(assigned[sub.id], {})
+    return out
+
+
+def test_only_replay_scopes_shuffle_partitions():
+    """The state-partition rule lives in ``streaming/replay.py`` alone: no
+    other package file passes ``spark.sql.shuffle.partitions`` to
+    scoped_conf."""
+    root = pathlib.Path(training_feed_kinesis_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path.relative_to(root).as_posix() == "streaming/replay.py":
+            continue
+        tree = ast.parse(path.read_text())
+        assigned = {
+            t.id: stmt.value
+            for stmt in tree.body
+            if isinstance(stmt, ast.Assign)
+            for t in stmt.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", getattr(node.func, "attr", None)) == "scoped_conf"
+                and _PARTS in _string_constants(node, assigned)
+            ):
+                hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not hits, hits
+
+
+@pytest.fixture
+def conf_sets(monkeypatch):
+    """Counts ``RuntimeConfig.set`` calls on every session."""
+    calls = []
+    real = RuntimeConfig.set
+
+    def counting(self, key, value):
+        calls.append(key)
+        return real(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", counting)
+    return calls
+
+
+def test_load_table_configures_each_session_once(spark, conf_sets):
+    """A memo hit makes no ``conf.set`` call; a new session is configured
+    on its first load and gets frames of its own."""
+    load_table(spark, SF_DIR, "region")
+    conf_sets.clear()
+    load_table(spark, SF_DIR, "region")
+    assert conf_sets == []
+    fresh = spark.newSession()
+    fresh.conf.set("spark.sql.session.timeZone", "America/New_York")
+    conf_sets.clear()
+    assert load_table(fresh, SF_DIR, "region").sparkSession is fresh
+    assert "spark.sql.session.timeZone" in conf_sets
+    assert fresh.conf.get("spark.sql.session.timeZone") == "UTC"
+    conf_sets.clear()
+    load_table(fresh, SF_DIR, "nation")
+    assert conf_sets == []
+
+
+def test_sql_named_window_leaves_no_view(spark, duck):
+    """ops_wave16 passes its frame to ``spark.sql`` as a parameter, so
+    building and collecting its keys leaves the catalog as found."""
+    before = sorted(t.name for t in spark.catalog.listTables())
+    registry = load_all()
+    for spec in registry.values():
+        if spec.fn.__module__.endswith(".ops_wave16"):
+            spec.fn(spark, SF_DIR).collect()
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    spec = registry["sql_named_window"]
+    assert_matches_oracle(spec.fn(spark, SF_DIR), duck, spec.oracle)

@@ -131,8 +131,8 @@ def bloom_join(spark: SparkSession, sf_dir: str):
     are CAPTURED on entry and restored verbatim on exit — never reset to
     hardcoded assumptions — so a foreign driver session with non-default
     values is left exactly as found (round-1 advice). Tables load before
-    the mutation because ``load_table``'s ``configure()`` re-applies the
-    engine's broadcast threshold."""
+    the mutation because a session's first ``load_table`` runs
+    ``configure()``, which sets the engine's broadcast threshold."""
     li = load_table(spark, sf_dir, "lineitem")
     od = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"

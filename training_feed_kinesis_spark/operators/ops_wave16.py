@@ -109,10 +109,9 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the DRY window idiom (identical physical plan to repeated OVER
     clauses: one sort per distinct frame spec, shared by consumers).
 
-    Issued through ``spark.sql`` against a temp view — this operator
-    exists to pin the SQL-surface behavior, not a new plan shape."""
-    ev = load_table(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("tfk_events_nw")
+    Issued through ``spark.sql`` with the frame as a parameter (PySpark
+    registers and drops its own view) — this operator exists to pin the
+    SQL-surface behavior, not a new plan shape."""
     return spark.sql(
         """
         SELECT user_id, event_id,
@@ -122,10 +121,11 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ORDER BY ts NULLS LAST, event_id NULLS LAST
                      ROWS UNBOUNDED PRECEDING), 4)
                  AS running_value
-        FROM tfk_events_nw
+        FROM {ev}
         WHERE event_type = 'purchase'
         WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS LAST, event_id NULLS LAST)
-        """
+        """,
+        ev=load_table(spark, sf_dir, "events"),
     )
 
 

@@ -16,15 +16,10 @@ BASELINE.json:6.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_qc = itertools.count()
-
 from ..registry import register
-from ..session import scoped_conf
 from ..tables import load_table
 
 CAT_TEXT = "2.J llm-pipeline (text)"
@@ -109,8 +104,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: progress objects are driver-side metadata; the reconciliation
     costs nothing data-sized."""
-    from ..operators.scans import scratch_dir
-    from ..streaming.replay import replay_stream
+    from ..streaming.replay import drain, progress, replay_stream
 
     stream = replay_stream(spark, sf_dir, "ordered", sentinel=True)
     agg = (
@@ -118,24 +112,9 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"tfk_progress_{next(_qc)}"
-    # same state-partition right-sizing as replay.drain(): the stateful
-    # partition count is fixed at query start and each micro-batch commits
-    # one state delta per partition — 200 defaults are pure overhead here
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("ckpt_prog_"))
-        .trigger(availableNow=True)
-    )
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
-        q = writer.start()
-    q.awaitTermination()
-    spark.catalog.dropTempView(name)  # only the progress events are read
-    # recentProgress retains every micro-batch of this short run; sum the
-    # source-reported input rows — the number a dashboard reconciles
-    total_in = sum(p["numInputRows"] for p in q.recentProgress)
+    # only the progress events are read: sum the source-reported input
+    # rows over every micro-batch — the number a dashboard reconciles
+    total_in = sum(p["numInputRows"] for p in progress(drain(agg, "complete")))
     n_data = total_in - 1  # the sentinel is the only non-table row
     return spark.createDataFrame(
         [(int(total_in), int(n_data))],

@@ -25,7 +25,6 @@ BASELINE.json:6.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 
@@ -33,15 +32,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import scoped_conf
-from ..streaming.replay import _ckpt_dir, _stamp_mtimes, sentinel_events
+from ..streaming.replay import _stamp_mtimes, drain, progress, sentinel_events
 from ..tables import load_table
 from .scans import derived_dir
 
 CAT_STREAM = "2.I streaming"
 CAT_EV = "2.L event analytics"
-
-_qc = itertools.count()  # memory-sink query names
 
 N_BATCHES = 4
 
@@ -106,18 +102,8 @@ def stream_watermark_gap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"tfk_wm_gap_{next(_qc)}"
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", _ckpt_dir())
-        .trigger(availableNow=True)
-    )
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
-        q = writer.start()
-    q.awaitTermination()
-    progresses = list(q.recentProgress)
+    out = drain(agg, "append")
+    progresses = progress(out)
     input_rows = sum(p["numInputRows"] for p in progresses)
     dropped = sum(
         p["stateOperators"][0]["numRowsDroppedByWatermark"]
@@ -125,12 +111,10 @@ def stream_watermark_gap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         if p["stateOperators"]
     )
     emitted = (
-        spark.table(name)
-        .filter(F.col("window.start") < "2025-01-01")
+        out.filter(F.col("window.start") < "2025-01-01")
         .agg(F.coalesce(F.sum("n"), F.lit(0)))
         .collect()[0][0]
     )
-    spark.catalog.dropTempView(name)
     real_inputs = input_rows - 1  # sentinel
     gap = real_inputs - emitted - dropped
     return spark.createDataFrame(

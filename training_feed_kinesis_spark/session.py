@@ -4,7 +4,7 @@ Two entry paths exist:
   * our own tests / bench build a session via :func:`build_session`;
   * the verify driver passes us ITS session — so every conf this engine
     depends on must also be settable at runtime on a foreign session.
-    :func:`configure` does exactly that and is called from every table load.
+    :func:`configure` does exactly that, on a session's first table load.
 
 Scale posture (SURVEY.md §4): AQE on (skew-join split, shuffle coalescing,
 runtime join re-planning), broadcast threshold generous for star-schema dims,
@@ -44,21 +44,30 @@ _PERF_CONFS = {
 }
 
 
-def configure(spark: SparkSession) -> SparkSession:
-    """Apply engine-required confs to an existing (possibly foreign) session."""
-    for k, v in _CORRECTNESS_CONFS.items():
-        spark.conf.set(k, v)
-    for k, v in _PERF_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on this deployment; perf-only, never correctness
-    return spark
-
-
 # Session confs are global, not thread-local: every temporary conf change
 # in the package goes through scoped_conf, serialized by this one lock.
 _CONF_LOCK = threading.RLock()
+
+
+def configure(spark: SparkSession) -> SparkSession:
+    """Apply engine-required confs to an existing (possibly foreign)
+    session, once per Python session object: the object is marked, the
+    way ``tables.parallelize`` marks frames, so every later table load
+    skips the six py4j ``conf.set`` calls. A ``newSession()`` is a new
+    object and is configured on its first load."""
+    if getattr(spark, "_tfk_configured", False):
+        return spark
+    with _CONF_LOCK:
+        if not getattr(spark, "_tfk_configured", False):
+            for k, v in _CORRECTNESS_CONFS.items():
+                spark.conf.set(k, v)
+            for k, v in _PERF_CONFS.items():
+                try:
+                    spark.conf.set(k, v)
+                except Exception:
+                    pass  # static conf on this deployment; perf-only, never correctness
+            spark._tfk_configured = True
+    return spark
 
 
 @contextlib.contextmanager

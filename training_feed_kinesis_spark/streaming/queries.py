@@ -47,7 +47,7 @@ _VAL_CENTS_SUM = CENTS_SUM_SQL.format(col="value")
 from ..operators.scans import scratch_dir
 from ..registry import register
 from ..tables import load_table, sane_ts, sane_ts_sql
-from .replay import drain, replay_stream
+from .replay import drain, replay_stream, start_stream
 
 CAT_SRC = "2.A scans/sources/sinks"
 CAT = "2.I streaming"
@@ -314,13 +314,13 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     def capture(batch_df: DataFrame, batch_id: int) -> None:
         captured.append((batch_id, batch_df.toPandas()))
 
-    q = (
+    q = start_stream(
+        spark,
         agg_of(replay_stream(spark, sf_dir, "ordered"))
         .writeStream.foreachBatch(capture)
         .outputMode("update")
         .option("checkpointLocation", scratch_dir("ckpt_modes_"))
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     q.awaitTermination()
 

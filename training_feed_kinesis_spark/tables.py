@@ -111,8 +111,12 @@ def content_key(spark: SparkSession, paths) -> tuple:
     return tuple(stamp)
 
 
-# Plan memo (r12): content_key of the table file -> the lazy, UNCACHED
-# post-normalization DataFrame. METADATA/plan reuse only — every action
+# Plan memo (r12): (id of the session object, content_key of the table
+# file) -> the lazy, UNCACHED post-normalization DataFrame. A frame belongs
+# to the session that read it: sessions of one application share the
+# applicationId but not temp views or confs, so a ``newSession()`` gets
+# its own frames (the entry pins its session, so the id is never reused
+# while the entry lives). METADATA/plan reuse only — every action
 # over the returned frame re-reads the parquet (no .cache(), no
 # materialization). Motivation: spark.read.parquet does an eager
 # driver-side footer read + file listing per call (~60-90 ms of py4j +
@@ -127,7 +131,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table, applying required session confs + load-time fixes."""
     configure(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = content_key(spark, [path])
+    key = (id(spark), content_key(spark, [path]))
     df = _TABLE_PLAN_MEMO.get(key)
     if df is not None:
         return df
