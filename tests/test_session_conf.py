@@ -1,7 +1,7 @@
 """Session-conf isolation: ``session.scoped_conf`` is the one way the engine
 changes a session conf, it restores exactly, and no operator leaves the
 driver's session changed. Also: ``replay.start_stream`` is the one place
-that sizes a stateful stream's state partitions."""
+that starts a stream and sizes a stateful stream's state partitions."""
 
 from __future__ import annotations
 
@@ -236,6 +236,50 @@ def test_only_replay_scopes_shuffle_partitions():
                 isinstance(node, ast.Call)
                 and getattr(node.func, "id", getattr(node.func, "attr", None)) == "scoped_conf"
                 and _PARTS in _string_constants(node, assigned)
+            ):
+                hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not hits, hits
+
+
+def _chain_has_write_stream(node) -> bool:
+    """Whether an attribute/call chain passes through ``.writeStream``."""
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+            return True
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return False
+
+
+def test_only_replay_starts_streams():
+    """Every stream in the package starts through ``replay.start_stream``,
+    which owns the checkpoint: no other package file calls ``.start()``
+    on a ``writeStream`` chain (or on a name bound to one) or sets
+    ``checkpointLocation``."""
+    root = pathlib.Path(training_feed_kinesis_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path.relative_to(root).as_posix() == "streaming/replay.py":
+            continue
+        tree = ast.parse(path.read_text())
+        writers = {
+            t.id
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Assign) and _chain_has_write_stream(node.value)
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(tree):
+            starts_writer = (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "start"
+                and (
+                    _chain_has_write_stream(node.func.value)
+                    or getattr(node.func.value, "id", None) in writers
+                )
+            )
+            if starts_writer or (
+                isinstance(node, ast.Constant) and node.value == "checkpointLocation"
             ):
                 hits.append(f"{path.relative_to(root)}:{node.lineno}")
     assert not hits, hits

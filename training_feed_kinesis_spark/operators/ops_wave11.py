@@ -59,7 +59,7 @@ def stream_trigger_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     new data, and a crashed run resumes from the offset log. The
     companion test asserts run 1's sink really held only the first
     files' rows (tests/test_scale_guards.py pattern)."""
-    from ..streaming.replay import _prepare, _stamp_mtimes
+    from ..streaming.replay import _prepare, _stamp_mtimes, start_stream
 
     src_all = _prepare(spark, sf_dir, "ordered")
     parts = sorted(
@@ -74,17 +74,17 @@ def stream_trigger_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = load_table(spark, sf_dir, "events").schema
 
     def run_once() -> None:
-        q = (
+        start_stream(
+            spark,
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(work)
             .writeStream.format("parquet")
             .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+            .trigger(availableNow=True),
+            state_partitions=None,
+            checkpoint=ckpt,
+        ).awaitTermination()
 
     for f_ in parts[:_N_FIRST]:
         shutil.copy(os.path.join(src_all, f_), os.path.join(work, f_))

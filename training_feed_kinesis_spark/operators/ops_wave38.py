@@ -67,11 +67,10 @@ def stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anomaly rate, so the second sink is tiny. At 100 TB the
     quarantine parquet is the retro-ingest queue after the producer is
     fixed — same idempotent batchId-keyed layout as the main sink."""
-    from ..streaming.replay import replay_stream
+    from ..streaming.replay import replay_stream, start_stream
 
     main_sink = scratch_dir("quar_main_")
     quar_sink = scratch_dir("quar_dlq_")
-    ckpt = scratch_dir("ckpt_quar_")
     stream = replay_stream(spark, sf_dir, "ordered")
 
     reason = F.when(F.col("value").isNull(), "null_value").when(
@@ -94,13 +93,11 @@ def stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{quar_sink}/batch={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_route)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_stream(
+        spark,
+        stream.writeStream.foreachBatch(_route).trigger(availableNow=True),
+        state_partitions=None,
+    ).awaitTermination()
 
     valid = (
         spark.read.parquet(main_sink)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..streaming.replay import _stamp_mtimes
+from ..streaming.replay import _stamp_mtimes, start_stream
 from ..tables import load_table
 
 # shared LSH construction — SAME constants/expressions as the batch
@@ -136,7 +136,6 @@ def stream_dedup_near_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     idx_bands = scratch_dir("neardup_idx_bands_")
     idx_arrs = scratch_dir("neardup_idx_arrs_")
     results = scratch_dir("neardup_pairs_")
-    ckpt = scratch_dir("neardup_ckpt_")
     # initialize empty index/result stores so every batch can read them
     empty_bands = spark.createDataFrame(
         [], "doc_id long, band int, band_sig string"
@@ -178,14 +177,13 @@ def stream_dedup_near_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         bands.write.mode("append").parquet(idx_bands)
         arrs.write.mode("append").parquet(idx_arrs)
 
-    q = (
+    start_stream(
+        spark,
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        .trigger(availableNow=True),
+        state_partitions=None,
+    ).awaitTermination()
     return spark.read.parquet(results)

@@ -172,7 +172,7 @@ def stream_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is the standard lakehouse topology; partial aggregates per
     micro-batch keep the silver merge O(|groups|) per batch.
     """
-    from ..streaming.replay import replay_stream
+    from ..streaming.replay import replay_stream, start_stream
 
     raw_sink = scratch_dir("fanout_raw_")
     agg_sink = scratch_dir("fanout_agg_")
@@ -194,13 +194,11 @@ def stream_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").parquet(f"{agg_sink}/batch={batch_id}")
         batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", scratch_dir("ckpt_fanout_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_stream(
+        spark,
+        stream.writeStream.foreachBatch(write_batch).trigger(availableNow=True),
+        state_partitions=None,
+    ).awaitTermination()
     return (
         spark.read.parquet(agg_sink)
         .groupBy("event_type")

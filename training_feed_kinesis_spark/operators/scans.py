@@ -33,10 +33,10 @@ SCRATCH = os.environ.get(
 # r12): session-scoping the derived fixture/replay dir names (r12
 # compliance fix) meant each process writes fresh dirs under the stable
 # SCRATCH path and nothing ever deleted them — unbounded disk growth
-# across bench/test/sweep invocations (and tmpfs growth for /dev/shm
-# checkpoints). Every creation site registers its dir here; cleanup is
-# best-effort (ignore_errors: a dir busy at shutdown is left for the next
-# run's atexit, never an exception during teardown).
+# across bench/test/sweep invocations (streaming checkpoints included).
+# Every creation site registers its dir here; cleanup is best-effort
+# (ignore_errors: a dir busy at shutdown is left for the next run's
+# atexit, never an exception during teardown).
 _SESSION_SCRATCH: list[str] = []
 
 # Serializes derived_dir builds so concurrent driver threads — the test

@@ -319,7 +319,6 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg_of(replay_stream(spark, sf_dir, "ordered"))
         .writeStream.foreachBatch(capture)
         .outputMode("update")
-        .option("checkpointLocation", scratch_dir("ckpt_modes_"))
         .trigger(availableNow=True),
     )
     q.awaitTermination()
@@ -336,7 +335,9 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return complete
 
 
-def _foreachbatch_sink(spark: SparkSession, sf_dir: str, sink: str, ckpt: str) -> None:
+def _foreachbatch_sink(
+    spark: SparkSession, sf_dir: str, sink: str, ckpt: str | None = None
+) -> None:
     """Run the feed into an idempotent foreachBatch parquet sink: each batch
     writes to a batchId-keyed subdirectory with overwrite — a retried batch
     rewrites the same path instead of duplicating (SURVEY §1.4 at-least-once
@@ -348,13 +349,12 @@ def _foreachbatch_sink(spark: SparkSession, sf_dir: str, sink: str, ckpt: str) -
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{sink}/batch={batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_stream(
+        spark,
+        stream.writeStream.foreachBatch(write_batch).trigger(availableNow=True),
+        state_partitions=None,
+        checkpoint=ckpt,
+    ).awaitTermination()
 
 
 @register(
@@ -370,7 +370,7 @@ def sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch sink: batchId-keyed idempotent parquet writes; the sink's
     contents re-aggregated must equal the batch answer (no loss, no dups)."""
     sink = scratch_dir("febsink_")
-    _foreachbatch_sink(spark, sf_dir, sink, scratch_dir("ckpt_feb_"))
+    _foreachbatch_sink(spark, sf_dir, sink)
     return (
         spark.read.parquet(sink)
         .groupBy("event_type")
@@ -554,13 +554,11 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["v"] += 1
         b.write.mode("overwrite").parquet(f"{root}/v{state['v']}")
 
-    (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", scratch_dir("ckpt_cdc_"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_stream(
+        spark,
+        stream.writeStream.foreachBatch(merge).trigger(availableNow=True),
+        state_partitions=None,
+    ).awaitTermination()
     return (
         spark.read.parquet(f"{root}/v{state['v']}")
         .filter(F.col("event_type") != "error")

@@ -32,12 +32,13 @@ import itertools
 import os
 import shutil
 import time
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from ..operators.scans import derived_dir, scratch_dir, track_scratch
+from ..operators.scans import derived_dir, scratch_dir
 from ..session import scoped_conf
 from ..tables import load_table
 
@@ -149,22 +150,6 @@ def _with_sentinel(spark: SparkSession, src: str) -> str:
     return derived_dir(spark, "replay_sent", [src], build)
 
 
-def _ckpt_dir() -> str:
-    """Checkpoint scratch: prefer tmpfs (/dev/shm) — checkpoint WAL/state
-    commits are fsync-heavy and throwaway in this harness. Production
-    deployments pass a durable `checkpoint` path instead."""
-    import tempfile
-
-    shm = "/dev/shm/tfk_ckpt"
-    try:
-        os.makedirs(shm, exist_ok=True)
-        # tmpfs: throwaway WAL/state commits MUST be reclaimed at exit or
-        # repeated invocations grow RAM-backed storage (ADVICE r12)
-        return track_scratch(tempfile.mkdtemp(prefix="ckpt_", dir=shm))
-    except OSError:
-        return scratch_dir("ckpt_")
-
-
 # Final StreamingQueryProgress of the most recent drain() — tests assert
 # state-store provider/metrics from here (driver-side metadata, never data).
 LAST_PROGRESS: dict | None = None
@@ -177,26 +162,57 @@ ROCKSDB_PROVIDER = (
 # because ``None`` already means "leave the session's conf alone").
 ONE_WAVE = object()
 
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_confs(checkpoint: str) -> dict:
+    """The checkpoint-manager conf for a query checkpointing at
+    ``checkpoint``: the file-system manager for a local path (no scheme,
+    or ``file:``), none (Spark's default) for any other scheme."""
+    if urlsplit(checkpoint).scheme in ("", "file"):
+        return {"spark.sql.streaming.checkpointFileManagerClass": FS_CHECKPOINT_MANAGER}
+    return {}
+
 
 def start_stream(
     spark: SparkSession,
     writer: DataStreamWriter,
     state_partitions=ONE_WAVE,
     rocksdb: bool = False,
+    checkpoint: str | None = None,
 ) -> StreamingQuery:
-    """Start ``writer``'s query with its state store sized and placed:
-    every stateful stream in the package starts here (:func:`drain` for
-    memory sinks, directly for ``foreachBatch`` sinks).
+    """Start ``writer``'s query with its checkpoint and state store placed
+    and sized: every stream in the package starts here (:func:`drain` for
+    memory sinks, directly for ``foreachBatch`` and file sinks).
+
+    ``checkpoint`` is the query's ``checkpointLocation``; ``None`` gives
+    it a fresh scratch dir, removed at exit. A local checkpoint is
+    written through Spark's ``FileSystemBasedCheckpointFileManager``
+    (:func:`checkpoint_confs`). Spark's default manager goes through
+    Hadoop's ``FileContext``, and without libhadoop the local file
+    system forks a shell (``chmod``, ``readlink``) for its permission
+    and link-status calls: every micro-batch paid that in its offset
+    WAL, each state-store partition's commit and the commit log. On a
+    4-core host, a warm ``stream_dedup_watermark`` drain at sf0.01 went
+    from ~1 824 new processes to ~527 and from 1.7-2.4 s of summed state
+    commit to 0.13-0.15 s, and ``feed_stream`` ``pass_s`` from 3.59 to
+    2.88 s (medians of 12 pairs). Any other scheme keeps Spark's
+    default: the file-system manager commits by ``FileSystem.rename``,
+    which is not atomic on an object store (rename there is copy +
+    delete), and on HDFS the default's ``FileContext`` rename is what
+    makes a commit atomic.
 
     ``state_partitions`` sets ``spark.sql.shuffle.partitions`` for this
     query, which fixes its stateful-operator partition count at start.
     Each micro-batch commits one state-store version PER partition, a
-    fixed cost that does not depend on row count (RocksDB's commit file
-    sync dominates it). The default is one wave of tasks,
-    ``min(8, defaultParallelism)``, so every partition commits in the
-    same wave. At 8 partitions on a 4-slot host the commits ran in two
-    serial waves; at 4, the traced ``feed_stream`` run
-    (``stream_dedup_watermark``) went from 693 to 372 ms
+    fixed cost that does not depend on row count. The default is one
+    wave of tasks, ``min(8, defaultParallelism)``, so every partition
+    commits in the same wave. At 8 partitions on a 4-slot host the
+    commits ran in two serial waves; at 4, the traced ``feed_stream``
+    run (``stream_dedup_watermark``) went from 693 to 372 ms
     ``state.commit_ms`` per batch and from 72 to 40 tasks per pass, and
     ``feed_stream`` ``pass_s`` from 5.97 to 4.61 s (medians of 12 pairs).
     An in-process sweep over seven stateful keys at sf0.1 measured 3-32%
@@ -205,19 +221,21 @@ def start_stream(
     25 s at 1 against 11 s at 8). An explicit count is honoured;
     ``None`` leaves the session's conf alone — the production setting,
     where state cardinality is huge and the conf comes from cluster
-    tuning.
+    tuning, and the setting for a ``foreachBatch`` sink whose batch
+    work should keep the session's shuffle partitions.
 
     ``rocksdb=True`` runs this query under the RocksDB state-store
     provider (off-heap/on-disk keyed state + changelog checkpointing) —
     the 100 TB posture, where state cardinality outgrows executor heap;
     results are identical by construction.
 
-    A query fixes its confs when it starts, so both are scoped to
+    A query fixes its confs when it starts, so all of them are scoped to
     ``writer.start()`` alone: concurrent starts hold the conf lock only
     briefly."""
+    checkpoint = checkpoint or scratch_dir("ckpt_")
     if state_partitions is ONE_WAVE:
         state_partitions = min(8, spark.sparkContext.defaultParallelism)
-    confs = {}
+    confs = checkpoint_confs(checkpoint)
     if state_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(state_partitions)
     if rocksdb:
@@ -226,7 +244,7 @@ def start_stream(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
         ] = "true"
     with scoped_conf(spark, **confs):
-        return writer.start()
+        return writer.option("checkpointLocation", checkpoint).start()
 
 
 def drain(
@@ -240,12 +258,14 @@ def drain(
     sink; return the materialized batch DataFrame. The memory sink is a
     test/CI harness — production sinks are parquet/foreachBatch.
 
-    The query starts through :func:`start_stream`, which sizes its state
-    to one wave of tasks, ``min(8, defaultParallelism)`` partitions,
-    unless ``state_partitions`` says otherwise (``None``: the session's
-    conf), and with ``rocksdb=True`` puts it on the RocksDB provider.
-    The query's full progress history rides on the returned frame; read
-    it with :func:`progress`."""
+    The query starts through :func:`start_stream`, which checkpoints it
+    at ``checkpoint`` (``None``: a fresh scratch dir) through the
+    file-system manager when that path is local, sizes its state to one
+    wave of tasks, ``min(8, defaultParallelism)`` partitions, unless
+    ``state_partitions`` says otherwise (``None``: the session's conf),
+    and with ``rocksdb=True`` puts it on the RocksDB provider. The
+    query's full progress history rides on the returned frame; read it
+    with :func:`progress`."""
     global LAST_PROGRESS
     spark = df.sparkSession
     name = f"tfk_replay_{next(_qcounter)}"
@@ -253,10 +273,9 @@ def drain(
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint or _ckpt_dir())
         .trigger(availableNow=True)
     )
-    q = start_stream(spark, writer, state_partitions, rocksdb)
+    q = start_stream(spark, writer, state_partitions, rocksdb, checkpoint)
     q.awaitTermination()
     LAST_PROGRESS = q.lastProgress
     # the resolved frame keeps the sink's data; the view is only its name
