@@ -16,9 +16,9 @@ Seeds are offsets into each generator's own seed space (the generators
 apply their own bases: join +10k, window +20k, composite +30k), so
 ``--start`` here continues the same numbering the CI ranges use.
 Failures print the generator, seed, SQL, and the comparator's first
-mismatched rows, and the run exits 1; the comparator is the exact
-driver-equivalent check the CI fuzz uses (float_tol=2e-4 for
-ROUND-boundary reduction-order flips, SURVEY §5.4).
+mismatched rows, and the run exits 1; the comparator is the one the CI
+fuzz uses, ``training_feed_kinesis_spark.oracle.mismatch`` with
+float_tol=2e-4 for ROUND-boundary reduction-order flips (SURVEY §5.4).
 """
 
 from __future__ import annotations
@@ -29,10 +29,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
 from tests import test_fuzz as tf  # noqa: E402
-from tests.conftest import assert_matches_oracle  # noqa: E402
+from training_feed_kinesis_spark import oracle  # noqa: E402
 from training_feed_kinesis_spark.session import build_session  # noqa: E402
 from training_feed_kinesis_spark.tables import load_table  # noqa: E402
 
@@ -75,12 +73,7 @@ def main() -> int:
     spark = build_session("tfk-deepfuzz")
     for t in _VIEW_TABLES:
         load_table(spark, args.sf_dir, t).createOrReplaceTempView(t)
-    duck = duckdb.connect()
-    for t in _VIEW_TABLES:
-        duck.execute(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
+    duck = oracle.connect(args.sf_dir)
 
     failures: list[tuple[str, int, str, str]] = []
     ran = 0
@@ -89,11 +82,12 @@ def main() -> int:
         for seed in range(args.start, args.start + args.count):
             sql = gen(seed)
             ran += 1
-            try:
-                assert_matches_oracle(spark.sql(sql), duck, sql, float_tol=2e-4)
-            except AssertionError as exc:
-                failures.append((name, seed, sql, str(exc)))
-                print(f"FAIL {name} seed={seed}\n  {sql}\n  {exc}\n")
+            reason = oracle.mismatch(
+                spark.sql(sql).toPandas(), duck.execute(sql).fetchdf(), float_tol=2e-4
+            )
+            if reason:
+                failures.append((name, seed, sql, reason))
+                print(f"FAIL {name} seed={seed}\n  {sql}\n  {reason}\n")
         print(f"{name:<10} seeds {args.start}..{args.start + args.count - 1} "
               f"done ({len([f for f in failures if f[0] == name])} fail)")
 

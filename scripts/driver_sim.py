@@ -1,6 +1,7 @@
 """Simulate the verify driver: plain SparkSession (none of our confs),
 run entry() at sf0.001, then every queries()[k] at sf0.01 vs oracle_sql()[k]
-through DuckDB views — order-insensitive value compare. Usage:
+through DuckDB views, compared by ``training_feed_kinesis_spark.oracle``
+(order-insensitive, hash-faithful). Usage:
     python scripts/driver_sim.py [key ...]
     python scripts/driver_sim.py --chunk 150 [key ...]
 
@@ -12,7 +13,7 @@ single key; every key passes in a fresh JVM). The REAL driver runs only
 a 50-key window per round, so per-key fidelity is what matters; chunking
 bounds JVM lifetime without changing any per-key behavior.
 """
-import sys, math, time
+import sys, time
 sys.path.insert(0, "/root/repo")
 
 import os as _os
@@ -49,50 +50,19 @@ if "--chunk" in sys.argv[1:]:
         _bad += 1 if _rc else 0
     sys.exit(1 if _bad else 0)
 
-import duckdb
 from pyspark.sql import SparkSession
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-def norm(v):
-    import numpy as np, pandas as pd, datetime
-    if v is None or (isinstance(v, float) and math.isnan(v)): return None
-    # HASH-FAITHFUL (r13, VERDICT r12 item 2): the old round(f + 0.0, 6)
-    # erased signed zeros and 7th-digit drift that the real driver's value
-    # hash catches — it approved a "597/597 green" sweep over a key the
-    # driver marked red (llm_dsir_weight, -0.0 vs +0.0 at the final
-    # ROUND). repr() is the shortest round-trip representation: full
-    # precision, and it spells -0.0 differently from 0.0. bool/float both
-    # normalize to repr strings so True/4/4.0 are three distinct values,
-    # matching the driver's representation-strict hash (tests/conftest
-    # _num_class rationale).
-    if isinstance(v, (bool, np.bool_)): return repr(bool(v))
-    if isinstance(v, (np.floating, float)):
-        f = float(v)
-        return None if math.isnan(f) else repr(f)
-    if isinstance(v, np.integer): return int(v)
-    if isinstance(v, pd.Timestamp): return None if v is pd.NaT else v.isoformat()
-    if isinstance(v, (datetime.datetime, datetime.date)): return v.isoformat()
-    if isinstance(v, (np.ndarray, list, tuple)): return tuple(norm(x) for x in v)
-    if isinstance(v, dict): return tuple(sorted((k, norm(x)) for k, x in v.items()))
-    return v
-
-def canon(pdf):
-    cols = sorted(pdf.columns)
-    return cols, sorted((tuple(norm(r[c]) for c in cols) for r in pdf.to_dict("records")), key=repr)
 
 spark = SparkSession.builder.master("local[8]").config("spark.ui.enabled","false") \
     .config("spark.ui.showConsoleProgress","false").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as e
-from training_feed_kinesis_spark import tables
+from training_feed_kinesis_spark import oracle, tables
 
 rows = e.entry(spark).collect()
 print(f"entry(): {len(rows)} rows  first={rows[0]}")
 assert len(rows) > 0
 
-con = duckdb.connect()
-for t in TABLES:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+con = oracle.connect(SF)
 
 qs, os_ = e.queries(), e.oracle_sql()
 keys = sys.argv[1:] or sorted(qs)
@@ -114,13 +84,11 @@ for i, k in enumerate(keys):
         pdf = qs[k](spark, SF).toPandas()
         if k in os_:
             exp = con.execute(os_[k]).fetchdf()
-            ac, ar = canon(pdf); ec, er = canon(exp)
-            status = "MATCH" if (ac == ec and len(ar) == len(er) and ar == er) else "MISMATCH"
-            if status == "MISMATCH":
+            reason = oracle.mismatch(pdf, exp)
+            status = "MISMATCH" if reason else "MATCH"
+            if reason:
                 fails += 1
-                print(f"  cols spark={ac} oracle={ec} rows {len(ar)}/{len(er)}")
-                for a, b in list(zip(ar, er))[:3]:
-                    if a != b: print(f"  spark={a}\n  oracle={b}")
+                print(f"  {reason}")
         else:
             status = f"ROWS-ONLY({len(pdf)})"
     except Exception as ex:

@@ -40,10 +40,8 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-import duckdb
-
+from training_feed_kinesis_spark.oracle import connect
 from training_feed_kinesis_spark.registry import load_all
-from training_feed_kinesis_spark.tables import TABLES
 
 import os
 
@@ -180,19 +178,12 @@ def main() -> int:
 
     def _cons():
         if not hasattr(tls, "cons"):
-            tls.cons = {}
-            for sf in (SF_LO, SF_HI):
-                con = duckdb.connect()
+            tls.cons = {sf: connect(sf) for sf in (SF_LO, SF_HI)}
+            for con in tls.cons.values():
                 # cap per-connection parallelism: 4 pool workers × the
                 # default threads=n_cores thrashed (measured 51 → 109 s,
                 # sys time 15 min); 4 × 8 = one core set, no contention
                 con.execute("SET threads=8")
-                for t in TABLES:
-                    con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM"
-                        f" read_parquet('{sf}/{t}.parquet')"
-                    )
-                tls.cons[sf] = con
         return tls.cons
 
     def _probe(item):

@@ -27,10 +27,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
+from training_feed_kinesis_spark.tables import TABLES  # noqa: E402
 SRC = os.environ.get("TFK_PERMUTE_SRC", "/root/testdata/sf0.01")
 
 

@@ -26,20 +26,14 @@ def main() -> int:
     ap.add_argument("--keys", nargs="*", help="restrict to these keys")
     args = ap.parse_args()
 
-    import duckdb
-
+    from training_feed_kinesis_spark.oracle import connect
     from training_feed_kinesis_spark.registry import load_all
     from training_feed_kinesis_spark.session import build_session
-    from training_feed_kinesis_spark.tables import TABLES
     from training_feed_kinesis_spark.typelint import lint_registry
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = build_session("type-parity-lint")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
+    con = connect(args.sf_dir)
 
     n_checked, bad, errs = lint_registry(
         spark, con, load_all(), args.sf_dir, keys=args.keys

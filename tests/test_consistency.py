@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.session import scoped_conf
 
 from .conftest import SF_DIR
@@ -184,7 +185,7 @@ def test_dedup_watermark_runs_on_rocksdb_provider(spark, registry):
 
     df = registry["stream_dedup_watermark"].fn(spark, SF_DIR)
     assert df.count() > 0
-    prog = replay.LAST_PROGRESS
+    prog = replay.progress(df)[-1]
     assert prog is not None and prog.get("stateOperators"), prog
     metrics = prog["stateOperators"][0].get("customMetrics", {})
     rocks_keys = [k for k in metrics if "rocksdb" in k.lower()]
@@ -550,10 +551,6 @@ def test_seq_match_detects_planted_funnels(spark, registry, funnel_planted_sf):
     """Detection-power proof: the chain counter fires with exactly the
     planted arithmetic, and the Spark result still matches the DuckDB
     oracle on the planted table."""
-    import duckdb as _dd
-
-    from training_feed_kinesis_spark.tables import TABLES
-
     from .conftest import assert_matches_oracle
 
     spec = registry["events_seq_match"]
@@ -564,18 +561,10 @@ def test_seq_match_detects_planted_funnels(spark, registry, funnel_planted_sf):
     assert got[9001] == (1, 1)
     assert got[9002] == (4, 2)
     assert 9003 not in got  # no click → no chain
-    con = _dd.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{funnel_planted_sf}/{t}.parquet')"
-        )
-    try:
+    with oracle.connect(funnel_planted_sf) as con:
         assert_matches_oracle(
             spec.fn(spark, funnel_planted_sf), con, spec.oracle
         )
-    finally:
-        con.close()
 
 
 def test_seq_match_users_subset_of_purchasers(spark, registry):

@@ -30,6 +30,7 @@ import shutil
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
 
@@ -85,15 +86,7 @@ def empty_dirs(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_empties(empty_dirs):
-    cons = {}
-    for v, d in empty_dirs.items():
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{d}/{t}.parquet')"
-            )
-        cons[v] = con
+    cons = {v: oracle.connect(d) for v, d in empty_dirs.items()}
     yield cons
     for con in cons.values():
         con.close()

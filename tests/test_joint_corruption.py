@@ -58,6 +58,7 @@ import shutil
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
 
@@ -180,14 +181,8 @@ def joint_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_joint(joint_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{joint_dir}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(joint_dir) as con:
+        yield con
 
 
 def test_joint_fixture_nonvacuous(joint_dir):

@@ -33,6 +33,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
 
@@ -164,14 +165,8 @@ def jt_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_jt(jt_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{jt_dir}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(jt_dir) as con:
+        yield con
 
 
 def test_fixture_nonvacuous(jt_dir):

@@ -23,10 +23,10 @@ from __future__ import annotations
 
 import struct
 
-import duckdb
 import pandas as pd
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.operators.ops_wave106 import (
     _corrupt,
     bmp_parse_status,
@@ -36,7 +36,6 @@ from training_feed_kinesis_spark.operators.ops_wave79 import (
     _bmp_encode_batch,
 )
 from training_feed_kinesis_spark.registry import load_all
-from training_feed_kinesis_spark.tables import TABLES
 
 from .conftest import assert_matches_oracle
 
@@ -134,16 +133,8 @@ def test_unplanted_adversarial_shapes_are_total():
 
 def test_census_matches_oracle_small(spark):
     spec = _REGISTRY["multimodal_bmp_admission_census"]
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{SF_SMALL}/{t}.parquet')"
-            )
+    with oracle.connect(SF_SMALL) as con:
         assert_matches_oracle(spec.fn(spark, SF_SMALL), con, spec.oracle)
-    finally:
-        con.close()
 
 
 def test_census_covers_every_status(spark):

@@ -15,6 +15,7 @@ import shutil
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.tables import TABLES
 
 from .conftest import SF_DIR, assert_matches_oracle
@@ -82,14 +83,8 @@ def corrupted_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_corrupted(corrupted_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{corrupted_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(corrupted_sf) as con:
+        yield con
 
 
 @pytest.fixture(scope="module")
@@ -148,14 +143,8 @@ def preepoch_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_preepoch(preepoch_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{preepoch_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(preepoch_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", TIME_CONSUMERS)
@@ -223,14 +212,8 @@ def degenerate_text_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_degenerate_text(degenerate_text_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{degenerate_text_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(degenerate_text_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", TEXT_CONSUMERS)
@@ -277,14 +260,8 @@ def corrupted_emb_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_corrupted_emb(corrupted_emb_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{corrupted_emb_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(corrupted_emb_sf) as con:
+        yield con
 
 
 def test_embedding_validate_flags_planted_corruption(
@@ -353,14 +330,8 @@ def unicode_text_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_unicode(unicode_text_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{unicode_text_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(unicode_text_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", TEXT_CONSUMERS)
@@ -415,14 +386,8 @@ def dupts_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_dupts(dupts_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{dupts_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(dupts_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", ORDER_CONSUMERS)
@@ -540,14 +505,8 @@ def star_nullkeys_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_star_nullkeys(star_nullkeys_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{star_nullkeys_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(star_nullkeys_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", STAR_CONSUMERS)
@@ -609,14 +568,8 @@ def star_dirty_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_star_dirty(star_dirty_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{star_dirty_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(star_dirty_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", STAR_CONSUMERS)
@@ -708,14 +661,8 @@ def star_dimcorrupt_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_star_dimcorrupt(star_dimcorrupt_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{star_dimcorrupt_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(star_dimcorrupt_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", DIM_CONSUMERS)
@@ -801,14 +748,8 @@ def star_fractional_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_star_fractional(star_fractional_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{star_fractional_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(star_fractional_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", FRACTIONAL_CONSUMERS)
@@ -881,17 +822,11 @@ def test_pii_redact_fires_and_matches_on_planted_docs(
     spark, registry, pii_docs_sf
 ):
     spec = registry["llm_pii_redact_apply"]
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{pii_docs_sf}/{t}.parquet')"
-        )
     df = spec.fn(spark, pii_docs_sf)
-    assert_matches_oracle(df, con, spec.oracle)
+    with oracle.connect(pii_docs_sf) as con:
+        assert_matches_oracle(df, con, spec.oracle)
     hits = df.filter("n_email > 0 AND n_phone > 0").count()
     assert hits > 0, "planted PII must fire both kernels"
-    con.close()
 
 
 def test_no_plain_cast_on_json_extraction_anywhere():
@@ -1089,14 +1024,8 @@ def specialfloat_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_specialfloat(specialfloat_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{specialfloat_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(specialfloat_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", SPECIAL_FLOAT_CONSUMERS)
@@ -1233,14 +1162,8 @@ def empty_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_empty(empty_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{empty_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(empty_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", EMPTY_CLEAN_CONSUMERS)
@@ -1343,14 +1266,8 @@ def attr_null_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_attr_null(attr_null_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{attr_null_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(attr_null_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", ATTR_TEXT_CONSUMERS)
@@ -1456,14 +1373,8 @@ def event_key_null_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_event_key_null(event_key_null_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{event_key_null_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(event_key_null_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", EVENT_KEY_CONSUMERS)
@@ -1578,14 +1489,8 @@ def doc_reingest_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_doc_reingest(doc_reingest_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{doc_reingest_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(doc_reingest_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", DOC_REINGEST_CONSUMERS)
@@ -1686,14 +1591,8 @@ def vec_reingest_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_vec_reingest(vec_reingest_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{vec_reingest_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(vec_reingest_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", VEC_REINGEST_CONSUMERS)
@@ -1788,14 +1687,8 @@ def ev_redelivery_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_ev_redelivery(ev_redelivery_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{ev_redelivery_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(ev_redelivery_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", EVENTS_REDELIVERY_CONSUMERS)
@@ -1991,14 +1884,8 @@ def null_time_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_null_time(null_time_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{null_time_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(null_time_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize(
@@ -2130,14 +2017,8 @@ def dim_corrupt_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_dim_corrupt(dim_corrupt_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{dim_corrupt_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(dim_corrupt_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", DIM_CORRUPT_CONSUMERS)
@@ -2238,14 +2119,8 @@ def cust_reingest_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_cust_reingest(cust_reingest_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{cust_reingest_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(cust_reingest_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", CUST_REINGEST_CONSUMERS)
@@ -2363,14 +2238,8 @@ def supp_part_reingest_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_supp_part(supp_part_reingest_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{supp_part_reingest_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(supp_part_reingest_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", SUPP_PART_REINGEST_CONSUMERS)
@@ -2523,14 +2392,8 @@ def null_pk_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_null_pk(null_pk_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{null_pk_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(null_pk_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", NULLPK_CONSUMERS)

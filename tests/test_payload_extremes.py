@@ -36,6 +36,7 @@ import shutil
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
 
@@ -128,14 +129,8 @@ def payload_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_payload(payload_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{payload_dir}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(payload_dir) as con:
+        yield con
 
 
 def test_fixture_nonvacuous(payload_dir):

@@ -17,6 +17,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
 
@@ -71,14 +72,8 @@ def permuted_sf(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_permuted(permuted_sf):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{permuted_sf}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(permuted_sf) as con:
+        yield con
 
 
 @pytest.mark.parametrize("key", PERMUTATION_SENSITIVE_KEYS)

@@ -1,7 +1,8 @@
 """Session-conf isolation: ``session.scoped_conf`` is the one way the engine
 changes a session conf, it restores exactly, and no operator leaves the
 driver's session changed. Also: ``replay.start_stream`` is the one place
-that starts a stream and sizes a stateful stream's state partitions."""
+that starts a stream and sizes a stateful stream's state partitions, and
+``oracle.py`` is the one DuckDB-oracle harness."""
 
 from __future__ import annotations
 
@@ -19,7 +20,7 @@ import training_feed_kinesis_spark
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.session import scoped_conf
 from training_feed_kinesis_spark.streaming import replay
-from training_feed_kinesis_spark.tables import load_table
+from training_feed_kinesis_spark.tables import TABLES, load_table
 
 from .conftest import SF_DIR, assert_matches_oracle, scopes_confs
 
@@ -96,8 +97,8 @@ def test_drain_rocksdb_scope_reaches_the_query(spark):
     """The confs are scoped to start() alone, yet the query runs with them:
     a streaming query fixes its confs when it starts."""
     before = spark.conf.getAll
-    replay.drain(_window_counts(spark), state_partitions=3, rocksdb=True)
-    op = replay.LAST_PROGRESS["stateOperators"][0]
+    out = replay.drain(_window_counts(spark), state_partitions=3, rocksdb=True)
+    op = replay.progress(out)[-1]["stateOperators"][0]
     assert op["numShufflePartitions"] == 3, op
     assert any("rocksdb" in k.lower() for k in op["customMetrics"]), op
     assert spark.conf.getAll == before
@@ -188,11 +189,10 @@ def test_explicit_state_partitions_are_honoured(spark):
 
 def test_drain_progress_history_has_one_entry_per_batch(spark):
     """One file per micro-batch: the history holds each batch once, in
-    order, and ends at the query's last progress."""
+    order."""
     out = replay.drain(_window_counts(spark))
     history = replay.progress(out)
     assert [p["batchId"] for p in history] == list(range(len(history)))
-    assert history[-1]["batchId"] == replay.LAST_PROGRESS["batchId"]
     files = [
         f for f in os.listdir(replay._prepare(spark, SF_DIR, "ordered"))
         if f.startswith("part-") and not f.endswith(".crc")
@@ -238,6 +238,68 @@ def test_only_replay_scopes_shuffle_partitions():
                 and _PARTS in _string_constants(node, assigned)
             ):
                 hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not hits, hits
+
+
+_LOOPS = (ast.For, ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+_VIEW_SQL = ("CREATE VIEW", "read_parquet")
+_ORACLE = "training_feed_kinesis_spark/oracle.py"
+
+
+def _harness_hits(rel: str, tree) -> list:
+    """Where ``tree`` builds its own oracle views, rounds a ``+ 0.0``
+    with the builtin ``round``, or spells out the ten table names."""
+    hits = []
+    for node in ast.walk(tree):
+        if isinstance(node, _LOOPS) and rel != _ORACLE:
+            # string constants, f-string parts included
+            text = " ".join(
+                sub.value
+                for sub in ast.walk(node)
+                if isinstance(sub, ast.Constant) and isinstance(sub.value, str)
+            )
+            if all(s in text for s in _VIEW_SQL):
+                hits.append(f"{rel}:{node.lineno} view loop")
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) == "round"
+            and node.args
+            and isinstance(node.args[0], ast.BinOp)
+            and isinstance(node.args[0].op, ast.Add)
+            and any(
+                isinstance(side, ast.Constant) and side.value == 0.0
+                for side in (node.args[0].left, node.args[0].right)
+            )
+        ):
+            hits.append(f"{rel}:{node.lineno} round(x + 0.0)")
+        if rel == "training_feed_kinesis_spark/tables.py":
+            continue
+        names = None
+        if isinstance(node, (ast.Tuple, ast.List, ast.Set)):
+            names = {getattr(e, "value", None) for e in node.elts}
+        elif (
+            isinstance(node, ast.Attribute)
+            and node.attr == "split"
+            and isinstance(node.value, ast.Constant)
+            and isinstance(node.value.value, str)
+        ):
+            names = set(node.value.value.split())
+        if names is not None and set(TABLES) <= names:
+            hits.append(f"{rel}:{node.lineno} table-name list")
+    return hits
+
+
+def test_one_oracle_harness():
+    """``oracle.py`` alone builds the DuckDB views, no file rounds a
+    ``+ 0.0`` away with the builtin ``round`` (it would hide a signed
+    zero the driver's hash sees), and ``tables.py`` alone lists the ten
+    table names. ``perfbench/`` is left to its own benchmark change."""
+    repo = pathlib.Path(training_feed_kinesis_spark.__file__).parent.parent
+    hits = []
+    for top in ("training_feed_kinesis_spark", "tests", "scripts"):
+        for path in sorted((repo / top).rglob("*.py")):
+            rel = path.relative_to(repo).as_posix()
+            hits += _harness_hits(rel, ast.parse(path.read_text()))
     assert not hits, hits
 
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, assert_matches_oracle
 
 
 @pytest.fixture(scope="module")
@@ -154,13 +154,18 @@ def test_sim_lsh_recall_floor_on_planted_pairs(spark, tmp_path):
 
 def test_embed_stats_mean_rounding_to_zero_has_no_sign(spark, tmp_path):
     """A per-label mean in (-5e-5, 0) rounds to -0.0 in DuckDB and 0.0 in
-    Spark; both spellings add 0.0 so the cell is 0.0 on both engines.
-    Compared by ``repr``: the shared comparator's ``round(f + 0.0, 6)``
-    would hide the sign."""
+    Spark; both spellings add 0.0 so the cell is 0.0 on both engines."""
+    import shutil
+
     import duckdb
 
+    from training_feed_kinesis_spark import oracle
     from training_feed_kinesis_spark.registry import load_all
+    from training_feed_kinesis_spark.tables import TABLES
 
+    for t in TABLES:
+        if t != "embeddings":
+            shutil.copy(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
     src = f"read_parquet('{SF_DIR}/embeddings.parquet')"
     duckdb.execute(
         f"""COPY (SELECT vec_id,
@@ -171,26 +176,10 @@ def test_embed_stats_mean_rounding_to_zero_has_no_sign(spark, tmp_path):
                 FROM {src}) TO '{tmp_path}/embeddings.parquet' (FORMAT PARQUET)"""
     )
     spec = load_all()["llm_embed_stats"]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{tmp_path}/embeddings.parquet')"
-    )
-
-    raw = con.execute(
-        "SELECT ROUND(AVG(CAST(embedding[1] AS DOUBLE)), 4)"
-        " FROM embeddings WHERE label = 6"
-    ).fetchone()[0]
-    assert repr(raw) == "-0.0"  # the fixture holds a signed-zero cell
-
-    def cells(rows):
-        return sorted((r[0], r[1], repr(float(r[2])), r[3]) for r in rows)
-
-    expected = cells(
-        con.execute(f"SELECT label, pos, centroid_val, n_vectors FROM ({spec.oracle})").fetchall()
-    )
-    actual = cells(
-        spec.fn(spark, str(tmp_path))
-        .select("label", "pos", "centroid_val", "n_vectors")
-        .collect()
-    )
-    assert actual == expected
+    with oracle.connect(str(tmp_path)) as con:
+        raw = con.execute(
+            "SELECT ROUND(AVG(CAST(embedding[1] AS DOUBLE)), 4)"
+            " FROM embeddings WHERE label = 6"
+        ).fetchone()[0]
+        assert repr(raw) == "-0.0"  # the fixture holds a signed-zero cell
+        assert_matches_oracle(spec.fn(spark, str(tmp_path)), con, spec.oracle)

@@ -21,6 +21,7 @@ import pytest
 from pyspark.storagelevel import StorageLevel
 
 import training_feed_kinesis_spark
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.operators import llm_dedup
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES, load_table, memo, parallelize
@@ -73,15 +74,6 @@ def _rewrite_in_place(path: str, select: str) -> None:
     os.remove(tmp)
 
 
-def _oracle_con(sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
 @pytest.mark.parametrize(
     "key, table, select",
     [
@@ -111,10 +103,10 @@ def test_session_memos_are_content_keyed(spark, tmp_path, key, table, select):
     from the dir (substrates, the admitted embeddings, the graph edges)
     must follow the new content, not serve what the old content built."""
     d = _sf_copy(tmp_path)
-    fn, oracle = _REGISTRY[key].fn, _REGISTRY[key].oracle
-    assert_matches_oracle(fn(spark, d), _oracle_con(d), oracle)
+    fn, sql = _REGISTRY[key].fn, _REGISTRY[key].oracle
+    assert_matches_oracle(fn(spark, d), oracle.connect(d), sql)
     _rewrite_in_place(f"{d}/{table}.parquet", select)
-    assert_matches_oracle(fn(spark, d), _oracle_con(d), oracle)
+    assert_matches_oracle(fn(spark, d), oracle.connect(d), sql)
 
 
 def _cached_rdd_id(spark, df) -> int:

@@ -50,6 +50,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import (
     SANE_TS_MAX,
@@ -161,14 +162,8 @@ def temporal_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_temporal(temporal_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{temporal_dir}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(temporal_dir) as con:
+        yield con
 
 
 def test_fixture_nonvacuous(temporal_dir):

@@ -8,6 +8,10 @@ the lint catches it for ALL oracled keys without executing a single query.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.typelint import (
     classes_compatible,
@@ -16,7 +20,7 @@ from training_feed_kinesis_spark.typelint import (
     spark_class,
 )
 
-from .conftest import SF_DIR, _cell_eq_strict
+from .conftest import SF_DIR
 
 
 def test_registry_type_parity(spark, duck, registry_frames):
@@ -98,15 +102,42 @@ def test_classifier_table():
     assert not classes_compatible(("array", "int"), ("array", "float"))
 
 
+def _same(a, e, float_tol=0.0) -> bool:
+    """Whether one-cell frames holding ``a`` and ``e`` match."""
+    def cell(v):
+        return pd.DataFrame({"c": pd.Series([v], dtype=object)})
+
+    return oracle.mismatch(cell(a), cell(e), float_tol) is None
+
+
 def test_comparator_is_representation_strict():
     """4 vs 4.0 vs True must NOT compare equal (the driver hashes them
-    differently); equal representations still match, incl. nested arrays."""
-    assert not _cell_eq_strict(4, 4.0)
-    assert not _cell_eq_strict(True, 1)
-    assert not _cell_eq_strict((1, 2.0), (1, 2))
-    assert _cell_eq_strict(4, 4)
-    assert _cell_eq_strict(4.0, 4.0)
-    assert _cell_eq_strict((1, 2.0, "a"), (1, 2.0, "a"))
-    assert _cell_eq_strict(None, None)
-    assert _cell_eq_strict(4.0, 4.00005, float_tol=1e-3)
-    assert not _cell_eq_strict(4.0, 4.01, float_tol=1e-3)
+    differently); equal representations still match, incl. nested arrays.
+    The driver hashes a float's full ``repr``: the sign of a zero and the
+    17th digit count. NaN and NULL are one value, and a tolerance reaches
+    only cells that are floats on both sides."""
+    assert not _same(4, 4.0)
+    assert not _same(True, 1)
+    assert not _same((1, 2.0), (1, 2))
+    assert _same(4, 4)
+    assert _same(4.0, 4.0)
+    assert _same((1, 2.0, "a"), (1, 2.0, "a"))
+    assert _same(None, None)
+    assert _same(4.0, 4.00005, float_tol=1e-3)
+    assert not _same(4.0, 4.01, float_tol=1e-3)
+    assert not _same(-0.0, 0.0)
+    assert not _same(0.30000000000000004, 0.3)
+    assert _same(0.30000000000000004, 0.3, float_tol=1e-9)
+    assert _same(float("nan"), None)
+    assert not _same(np.array([1.0, -0.0]), np.array([1.0, 0.0]))
+    assert not _same("0.3", "0.3001", float_tol=1e-3)
+    assert not _same("0.3", 0.3001, float_tol=1e-3)
+
+
+def test_comparator_reasons():
+    """Rows match in any order; columns and row counts are named."""
+    a = pd.DataFrame({"k": [1, 2], "v": [0.5, 1.5]})
+    assert oracle.mismatch(a, a.iloc[::-1]) is None
+    assert oracle.mismatch(a, a.rename(columns={"v": "w"})).startswith("columns")
+    assert oracle.mismatch(a, a.iloc[:1]).startswith("row count")
+    assert oracle.mismatch(a, a.assign(v=[0.5, 2.5])).startswith("1/2 rows differ")

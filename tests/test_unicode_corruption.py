@@ -42,6 +42,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
 
@@ -171,14 +172,8 @@ def unicode_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_unicode(unicode_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{unicode_dir}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    with oracle.connect(unicode_dir) as con:
+        yield con
 
 
 def test_unicode_fixture_nonvacuous(unicode_dir):

@@ -12,13 +12,9 @@ import duckdb
 import pytest
 
 from training_feed_kinesis_spark.registry import load_all
+from training_feed_kinesis_spark.tables import TABLES
 
 from .conftest import SF_DIR
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
 
 _REGISTRY = load_all()
 

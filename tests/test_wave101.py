@@ -12,14 +12,11 @@ import shutil
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
+from training_feed_kinesis_spark.tables import TABLES
 
 from .conftest import SF_DIR
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
 
 _REGISTRY = load_all()
 
@@ -402,18 +399,10 @@ def test_mmd_survives_int64_overflow_moments(spark, mmd_overflow_dir):
     assert row["mmd2_lin"] == pytest.approx(exp_lin, rel=1e-9)
     assert row["mmd2_poly2"] == pytest.approx(exp_p2, rel=1e-9)
     # and the oracle agrees on the same fixture (engine parity held)
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{mmd_overflow_dir}/{t}.parquet')"
-            )
+    with oracle.connect(mmd_overflow_dir) as con:
         got = con.execute(
             _REGISTRY["vec_mmd_moment"].oracle
         ).fetchall()[0]
         assert got[0] == na and got[1] == nb
         assert got[2] == pytest.approx(exp_lin, rel=1e-9)
         assert got[3] == pytest.approx(exp_p2, rel=1e-9)
-    finally:
-        con.close()

@@ -20,6 +20,7 @@ import shutil
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
 
@@ -87,16 +88,8 @@ def test_empty_documents_oracle_matched(key, spark, tmp_path_factory):
             )
         else:
             shutil.copy(f"{SF_DIR}/{t}.parquet", d / f"{t}.parquet")
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{d}/{t}.parquet')"
-            )
+    with oracle.connect(d) as con:
         spec = _REGISTRY[key]
         df = spec.fn(spark, str(d))
         assert df.count() == 0
         assert_matches_oracle(df, con, spec.oracle)
-    finally:
-        con.close()

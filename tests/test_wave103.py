@@ -9,6 +9,7 @@ import shutil
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
 
@@ -140,14 +141,6 @@ def test_census_flags_planted_corruption(spark, census_corrupt_dir):
         assert (rows[t].n_null_pk, rows[t].n_dup_keys,
                 rows[t].n_conflicting) == (0, 0, 0)
     # and the oracle agrees on the corrupted dir
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{census_corrupt_dir}/{t}.parquet')"
-            )
+    with oracle.connect(census_corrupt_dir) as con:
         spec = _REGISTRY["dq_corruption_composite_census"]
         assert_matches_oracle(spec.fn(spark, census_corrupt_dir), con, spec.oracle)
-    finally:
-        con.close()

@@ -29,6 +29,7 @@ import shutil
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
 
@@ -119,17 +120,9 @@ def test_lsh_pairs_subset_of_exact_baseline(spark, planted_dir):
 
 
 def test_oracle_matches_on_planted_dir(spark, planted_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{planted_dir}/{t}.parquet')"
-        )
     spec = _REGISTRY["llm_dedup_embed_lsh"]
-    try:
+    with oracle.connect(planted_dir) as con:
         assert_matches_oracle(spec.fn(spark, planted_dir), con, spec.oracle)
-    finally:
-        con.close()
 
 
 def test_candidate_join_is_equijoin_no_cartesian(spark):

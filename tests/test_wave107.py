@@ -20,6 +20,7 @@ import io
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
 
@@ -99,16 +100,8 @@ def test_planted_twins_share_group_fate(spark, planted_dir):
 
 def test_oracle_matches_on_planted_dir(spark, planted_dir):
     spec = _REGISTRY[_KEY]
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{planted_dir}/{t}.parquet')"
-            )
+    with oracle.connect(planted_dir) as con:
         assert_matches_oracle(spec.fn(spark, planted_dir), con, spec.oracle)
-    finally:
-        con.close()
 
 
 def test_plan_broadcasts_centroid_no_cartesian(spark):

@@ -16,6 +16,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.operators.ops_wave96 import SPAN_K
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.tables import TABLES
@@ -98,13 +99,5 @@ def test_planted_twins_share_full_span_fingerprint(spark, planted_dir):
 
 def test_oracle_matches_on_planted_dir(spark, planted_dir):
     spec = _REGISTRY["llm_dup_span_extract"]
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{planted_dir}/{t}.parquet')"
-            )
+    with oracle.connect(planted_dir) as con:
         assert_matches_oracle(spec.fn(spark, planted_dir), con, spec.oracle)
-    finally:
-        con.close()

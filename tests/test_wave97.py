@@ -10,14 +10,11 @@ import shutil
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
+from training_feed_kinesis_spark.tables import TABLES
 
 from .conftest import SF_DIR, assert_matches_oracle
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
 
 _REGISTRY = load_all()
 
@@ -66,19 +63,11 @@ def test_cusum_alarms_only_after_planted_shift(spark, shifted_orders_sf):
 
 
 def test_cusum_oracle_parity_on_planted_shift(spark, shifted_orders_sf):
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{shifted_orders_sf}/{t}.parquet')"
-            )
+    with oracle.connect(shifted_orders_sf) as con:
         spec = _REGISTRY["ts_cusum_changepoint"]
         assert_matches_oracle(
             spec.fn(spark, shifted_orders_sf), con, spec.oracle
         )
-    finally:
-        con.close()
 
 
 def test_cusum_statistic_is_nonnegative(spark):
@@ -295,19 +284,11 @@ def test_money_census_detects_planted_pollution(spark, polluted_money_sf):
 def test_money_census_oracle_parity_on_pollution(
     spark, polluted_money_sf
 ):
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{polluted_money_sf}/{t}.parquet')"
-            )
+    with oracle.connect(polluted_money_sf) as con:
         spec = _REGISTRY["dq_money_magnitude_census"]
         assert_matches_oracle(
             spec.fn(spark, polluted_money_sf), con, spec.oracle
         )
-    finally:
-        con.close()
 
 
 @pytest.fixture(scope="module")
@@ -352,19 +333,11 @@ def test_widened_keys_survive_whale_corpus(spark, whale_orders_sf, key):
     ARITHMETIC_OVERFLOW on this fixture (corpus-total > 2^63 cents);
     now they complete AND still hash-match the oracle, whose HUGEINT
     arithmetic is exact on the same frame."""
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{whale_orders_sf}/{t}.parquet')"
-            )
+    with oracle.connect(whale_orders_sf) as con:
         spec = _REGISTRY[key]
         assert_matches_oracle(
             spec.fn(spark, whale_orders_sf), con, spec.oracle
         )
-    finally:
-        con.close()
 
 
 @pytest.fixture(scope="module")
@@ -425,19 +398,11 @@ def test_widened_lineitem_keys_survive_whales(
     """Same load-bearing proof as the orders side: with >2^63 total
     cents in play, the widened window/total accumulators complete and
     hash-match DuckDB's HUGEINT arithmetic."""
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{whale_lineitem_sf}/{t}.parquet')"
-            )
+    with oracle.connect(whale_lineitem_sf) as con:
         spec = _REGISTRY[key]
         assert_matches_oracle(
             spec.fn(spark, whale_lineitem_sf), con, spec.oracle
         )
-    finally:
-        con.close()
 
 
 # --- wave 98: post-detection analytics ---------------------------------------
@@ -533,16 +498,8 @@ def test_date_census_detects_planted_skew(spark, skewed_dates_sf):
     assert o["max_day"] == "2031-12-31"
     # untouched columns stay in range
     assert rows["lineitem.l_shipdate"]["n_before_range"] == 0
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{skewed_dates_sf}/{t}.parquet')"
-            )
+    with oracle.connect(skewed_dates_sf) as con:
         spec = _REGISTRY["dq_date_sanity_census"]
         assert_matches_oracle(
             spec.fn(spark, skewed_dates_sf), con, spec.oracle
         )
-    finally:
-        con.close()

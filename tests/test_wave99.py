@@ -11,15 +11,12 @@ import shutil
 import duckdb
 import pytest
 
+from training_feed_kinesis_spark import oracle
 from training_feed_kinesis_spark.registry import load_all
 from training_feed_kinesis_spark.session import scoped_conf
+from training_feed_kinesis_spark.tables import TABLES
 
 from .conftest import SF_DIR, assert_matches_oracle
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
 
 _REGISTRY = load_all()
 
@@ -34,16 +31,6 @@ def _fixture_dir(tmp_path_factory, name: str, replace: dict[str, str]) -> str:
     for t, q in replace.items():
         duckdb.execute(f"COPY ({q}) TO '{d}/{t}.parquet' (FORMAT PARQUET)")
     return str(d)
-
-
-def _oracle_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT *"
-            f" FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
 
 
 # --- stat_fisher_exact: brute-force hypergeometric cross-check --------------
@@ -118,7 +105,7 @@ def test_fisher_exact_fires_on_planted_association(spark, assoc_orders_sf):
     wk = rows["1995-06-05"]
     assert (wk["n"], wk["r1"], wk["c1"], wk["a"]) == (40, 20, 20, 20)
     assert wk["p_greater"] == 0.0  # rounds to 0 at 4dp
-    con = _oracle_con(assoc_orders_sf)
+    con = oracle.connect(assoc_orders_sf)
     assert_matches_oracle(
         _REGISTRY["stat_fisher_exact"].fn(spark, assoc_orders_sf),
         con,
@@ -214,7 +201,7 @@ def test_sprt_decides_both_ways_on_planted_rates(spark, uplift_events_sf):
             assert r["llr_at_decision"] >= math.log(19.0) - 1e-3
         else:
             assert r["llr_at_decision"] <= -math.log(19.0) + 1e-3
-    con = _oracle_con(uplift_events_sf)
+    con = oracle.connect(uplift_events_sf)
     assert_matches_oracle(
         _REGISTRY["events_sprt_boundary"].fn(spark, uplift_events_sf),
         con,
@@ -284,7 +271,7 @@ def test_ljung_box_constant_series_yields_null_not_error(
     row = _REGISTRY["ts_ljung_box"].fn(spark, constant_orders_sf).collect()[0]
     assert row["q_lb"] is None
     assert all(row[f"r{k}"] is None for k in range(1, 7))
-    con = _oracle_con(constant_orders_sf)
+    con = oracle.connect(constant_orders_sf)
     assert_matches_oracle(
         _REGISTRY["ts_ljung_box"].fn(spark, constant_orders_sf),
         con,
@@ -334,7 +321,7 @@ def test_rouge1_clipping_rule(spark, rouge_docs_sf):
     assert r["rouge1_p"] == 0.5
     assert r["rouge1_r"] == round(2 / 3, 4)
     assert r["rouge1_f1"] == round(4 / 7, 4)
-    con = _oracle_con(rouge_docs_sf)
+    con = oracle.connect(rouge_docs_sf)
     assert_matches_oracle(
         _REGISTRY["llm_rouge1_overlap"].fn(spark, rouge_docs_sf),
         con,
@@ -415,7 +402,7 @@ def test_printable_census_detects_planted_contamination(
     for src, r in rows.items():
         if src != "dirty":
             assert r["n_ctrl_docs"] == 0 and r["n_repl_docs"] == 0
-    con = _oracle_con(dirty_docs_sf)
+    con = oracle.connect(dirty_docs_sf)
     assert_matches_oracle(
         _REGISTRY["dq_text_printable_census"].fn(spark, dirty_docs_sf),
         con,
@@ -453,7 +440,7 @@ def empty_sf(tmp_path_factory):
     ],
 )
 def test_wave99_empty_corpus_parity(spark, empty_sf, key):
-    con = _oracle_con(empty_sf)
+    con = oracle.connect(empty_sf)
     assert_matches_oracle(
         _REGISTRY[key].fn(spark, empty_sf), con, _REGISTRY[key].oracle
     )

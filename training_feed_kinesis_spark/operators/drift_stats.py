@@ -282,7 +282,7 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM ph
     )
     SELECT strftime(d, '%Y-%m-%d') AS day,
-           ROUND(ph_t, 4) AS ph,
+           ROUND(ph_t, 4) + 0.0 AS ph,
            ROUND(drawup, 4) AS drawup,
            ROUND(drawup, 4) > 50.0 AS alarm
     FROM dd
@@ -297,6 +297,9 @@ def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs in the identical order. The raw stream never reaches the
     window: at 100 TB the day rollup is the only full-data pass.
     NULL ts dropped on both engines (the r8 NULL-time seam).
+
+    ``+ 0.0`` on both engines: a ``ph_t`` in (-5e-5, 0) rounds to -0.0 in
+    DuckDB and 0.0 in Spark, and adding 0.0 turns both into 0.0.
     """
     ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     day = ev.groupBy(F.to_date("ts").alias("d")).agg(
@@ -312,7 +315,7 @@ def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return dd.select(
         F.date_format("d", "yyyy-MM-dd").alias("day"),
-        F.round("ph_t", 4).alias("ph"),
+        (F.round("ph_t", 4) + 0.0).alias("ph"),
         F.round("drawup", 4).alias("drawup"),
         (F.round("drawup", 4) > 50.0).alias("alarm"),
     )

@@ -253,7 +253,7 @@ def graph_linkpred_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS within_edges,
            ds.deg_sum,
            ROUND(CAST(COALESCE(w.within_edges, 0) AS DOUBLE) / t.m
-                 - pow(CAST(ds.deg_sum AS DOUBLE) / (2 * t.m), 2), 4)
+                 - pow(CAST(ds.deg_sum AS DOUBLE) / (2 * t.m), 2), 4) + 0.0
              AS q_contrib
     FROM dsum ds LEFT JOIN within w ON w.brand = ds.brand CROSS JOIN m t
     """,
@@ -269,7 +269,9 @@ def graph_modularity_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one edge pass labeled by two broadcast dim joins, a
     brand-grain rollup, and a broadcast scalar m — every term of Q is a
-    ratio of exact integers, so both engines round identical doubles."""
+    ratio of exact integers, so both engines round identical doubles.
+    ``+ 0.0`` on both engines: a Q_b in (-5e-5, 0) rounds to -0.0 in
+    DuckDB and 0.0 in Spark, and adding 0.0 turns both into 0.0."""
     e = _edges(spark, sf_dir).select("pa", "pb")
     sym, deg = _sym_deg(e)
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
@@ -306,13 +308,16 @@ def graph_modularity_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("within_edges"),
             "deg_sum",
-            F.round(
-                F.coalesce(F.col("within_edges"), F.lit(0)).cast("double")
-                / F.col("m")
-                - F.pow(
-                    F.col("deg_sum").cast("double") / (2 * F.col("m")), 2
-                ),
-                4,
+            (
+                F.round(
+                    F.coalesce(F.col("within_edges"), F.lit(0)).cast("double")
+                    / F.col("m")
+                    - F.pow(
+                        F.col("deg_sum").cast("double") / (2 * F.col("m")), 2
+                    ),
+                    4,
+                )
+                + 0.0
             ).alias("q_contrib"),
         )
     )

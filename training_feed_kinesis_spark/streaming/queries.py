@@ -603,7 +603,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup state is the canonical state-cardinality blowup (one entry per
     key in the watermark horizon), exactly where heap-backed state dies at
     100 TB — tests assert the provider actually ran via the query's final
-    StreamingQueryProgress (replay.LAST_PROGRESS) AND the oracle proves
+    StreamingQueryProgress (``replay.progress(out)[-1]``) AND the oracle proves
     results are unchanged.
     """
     # NULL event-time rows dropped on both engines (r8 NULL-time seam:

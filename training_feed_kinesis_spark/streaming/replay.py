@@ -150,10 +150,6 @@ def _with_sentinel(spark: SparkSession, src: str) -> str:
     return derived_dir(spark, "replay_sent", [src], build)
 
 
-# Final StreamingQueryProgress of the most recent drain() — tests assert
-# state-store provider/metrics from here (driver-side metadata, never data).
-LAST_PROGRESS: dict | None = None
-
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -266,7 +262,6 @@ def drain(
     and with ``rocksdb=True`` puts it on the RocksDB provider. The
     query's full progress history rides on the returned frame; read it
     with :func:`progress`."""
-    global LAST_PROGRESS
     spark = df.sparkSession
     name = f"tfk_replay_{next(_qcounter)}"
     writer = (
@@ -277,7 +272,6 @@ def drain(
     )
     q = start_stream(spark, writer, state_partitions, rocksdb, checkpoint)
     q.awaitTermination()
-    LAST_PROGRESS = q.lastProgress
     # the resolved frame keeps the sink's data; the view is only its name
     out = spark.table(name)
     spark.catalog.dropTempView(name)
