@@ -1,5 +1,5 @@
 """Shared pytest fixtures: one SparkSession for the whole run, and the
-driver's DuckDB-oracle check (``training_feed_kinesis_spark.oracle``) at
+DuckDB-oracle check (``training_feed_kinesis_spark.oracle``) at
 sf0.001 for speed.
 """
 
@@ -88,7 +88,7 @@ def duck():
 
 
 def assert_matches_oracle(spark_df, duck_con, sql: str, float_tol: float = 0.0):
-    """The driver's check of ``spark_df`` against ``sql`` on ``duck_con``
+    """The hash-faithful check of ``spark_df`` against ``sql`` on ``duck_con``
     (``oracle.mismatch``; ``float_tol`` only for fuzzed queries)."""
     expected = duck_con.execute(sql).fetchdf()
     reason = oracle.mismatch(spark_df.toPandas(), expected, float_tol)

@@ -292,7 +292,7 @@ def _harness_hits(rel: str, tree) -> list:
 def test_one_oracle_harness():
     """``oracle.py`` alone builds the DuckDB views, no file rounds a
     ``+ 0.0`` away with the builtin ``round`` (it would hide a signed
-    zero the driver's hash sees), and ``tables.py`` alone lists the ten
+    zero a value hash sees), and ``tables.py`` alone lists the ten
     table names. ``perfbench/`` is left to its own benchmark change."""
     repo = pathlib.Path(training_feed_kinesis_spark.__file__).parent.parent
     hits = []

@@ -113,7 +113,7 @@ def _same(a, e, float_tol=0.0) -> bool:
 def test_comparator_is_representation_strict():
     """4 vs 4.0 vs True must NOT compare equal (the driver hashes them
     differently); equal representations still match, incl. nested arrays.
-    The driver hashes a float's full ``repr``: the sign of a zero and the
+    A value hash sees a float's full ``repr``: the sign of a zero and the
     17th digit count. NaN and NULL are one value, and a tolerance reaches
     only cells that are floats on both sides."""
     assert not _same(4, 4.0)

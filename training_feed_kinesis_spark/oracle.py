@@ -1,12 +1,13 @@
-"""The driver's oracle check, in one place: DuckDB views over a fixture
-dir, and the order-insensitive value comparison the driver's hash makes.
+"""The oracle check, in one place: DuckDB views over a fixture dir, and
+the order-insensitive comparison of ``queries()`` against ``oracle_sql()``
+results by a hash of their values.
 
 The comparison is HASH-FAITHFUL. ``repr`` is the shortest round-trip
 spelling of a float: full precision, and ``-0.0`` is not ``0.0``. Floats
 and bools both become ``repr`` strings, so ``True``, ``4`` and ``4.0``
-are three distinct values, as they are in the driver's hash. A rounded
-comparison once approved a sweep over a key the driver marked red
-(``llm_dsir_weight``, ``-0.0`` vs ``0.0`` at the final ROUND).
+are three distinct values, as they are in a value hash. A rounded
+comparison would call ``-0.0`` and ``0.0`` equal where a hash does not
+(``llm_dsir_weight`` at its final ROUND).
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ class _FloatRepr(str):
 
 
 def norm(v):
-    """One cell in the driver's canonical form."""
+    """One cell in the canonical form the value hash sees."""
     if v is None or (isinstance(v, float) and math.isnan(v)):
         return None
     if isinstance(v, (bool, np.bool_)):
@@ -78,7 +79,7 @@ def mismatch(
     actual: pd.DataFrame, expected: pd.DataFrame, float_tol: float = 0.0
 ) -> str | None:
     """``None`` when ``actual`` (Spark) matches ``expected`` (DuckDB), else a
-    one-line reason. ``float_tol=0`` is the driver's exact check. A fuzzed
+    one-line reason. ``float_tol=0`` is the exact check. A fuzzed
     query passes a small tolerance, applied only to cells that are floats
     on both sides: a sum landing on a ROUND(x, 4) boundary can round
     differently under another reduction order."""
