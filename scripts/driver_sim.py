@@ -14,9 +14,9 @@ a 50-key window per round, so per-key fidelity is what matters; chunking
 bounds JVM lifetime without changing any per-key behavior.
 """
 import sys, time
-sys.path.insert(0, "/root/repo")
-
 import os as _os
+sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
+
 SF = _os.environ.get("TFK_SIM_SF_DIR", "/root/testdata/sf0.01")
 
 if "--chunk" in sys.argv[1:]:

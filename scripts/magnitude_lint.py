@@ -35,15 +35,14 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from training_feed_kinesis_spark.oracle import connect
 from training_feed_kinesis_spark.registry import load_all
-
-import os
 
 # Default: the authoritative per-round audit pair. The pytest pin
 # (tests/test_magnitude_lint.py) runs the cheaper (sf0.001, sf0.01)

@@ -11,10 +11,12 @@ mechanically.
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from bench import HEADLINE  # noqa: E402
 from training_feed_kinesis_spark.registry import load_all  # noqa: E402
@@ -51,7 +53,7 @@ def main() -> None:
             out += ["Scan details:", ""]
             out += [f"- `{d}`" for d in details]
             out += [""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(_ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
     spark.stop()

@@ -4,8 +4,8 @@ print per-key cold/warm times + 5x warm factor. Usage:
     python scripts/scale_probe.py key [key ...]
 Recipe matches the BASELINE.md r10/r11 tier-2 probes: cold = first run,
 warm = immediate second run, same session (substrates/caches warm)."""
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 spark = (

@@ -148,6 +148,7 @@ def test_registry_importable_without_spark_session():
     import time) would crash that import (caught once in wave 54 —
     Column builders must be lazy). Prove every operator module imports
     cleanly in a Spark-free subprocess."""
+    import os
     import subprocess
     import sys
 
@@ -161,10 +162,30 @@ def test_registry_importable_without_spark_session():
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         timeout=120,
     )
     assert r.returncode == 0, r.stderr[-2000:]
+
+
+def test_no_python_file_names_a_fixed_checkout():
+    """Scripts and tests find the repository from ``__file__``. A fixed
+    absolute checkout path on ``sys.path`` or as a ``cwd`` makes a run
+    from any other clone import or write that fixed checkout instead."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    fixed = re.compile(
+        r"sys\.path\.insert\(\s*\d+\s*,\s*['\"]/|cwd\s*=\s*['\"]/"
+    )
+    hits = [
+        str(path.relative_to(root))
+        for path in sorted(root.rglob("*.py"))
+        if not any(part.startswith(".") for part in path.relative_to(root).parts)
+        and (str(root) in (text := path.read_text()) or fixed.search(text))
+    ]
+    assert not hits, hits
 
 
 def test_pii_patterns_detect_planted_strings(spark):

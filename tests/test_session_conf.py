@@ -390,3 +390,41 @@ def test_sql_named_window_leaves_no_view(spark, duck):
     assert sorted(t.name for t in spark.catalog.listTables()) == before
     spec = registry["sql_named_window"]
     assert_matches_oracle(spec.fn(spark, SF_DIR), duck, spec.oracle)
+
+
+def _compiled_classes(spark) -> int:
+    """Janino compilations so far in this JVM (a process-wide count)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_pass_compiles_no_generated_classes(spark):
+    """Spark keeps compiled generated classes in an LRU whose size is the
+    static ``spark.sql.codegen.cache.maxEntries``. At Spark's default of
+    100, a pass over these keys evicted its own classes, and every warm
+    pass recompiled 50-70 of them. The size ``build_session`` sets holds
+    them, so the third pass compiles none.
+
+    AQE numbers whole-stage codegen stages in the order their query
+    stages are planned, which depends on which stage finishes first, and
+    the number is part of the generated class name; a new numbering is a
+    new class. The passes run with ``useIdInClassName`` off so that only
+    eviction, not that race, can make a warm pass compile."""
+    registry = load_all()
+    keys = [
+        "agg_basic",
+        "q8_market_share",
+        "funnel_conversion",
+        "llm_dedup_near",
+        "llm_curation_waterfall",
+    ]
+    compiled = []
+    with scoped_conf(spark, **{"spark.sql.codegen.useIdInClassName": "false"}):
+        for _ in range(3):
+            before = _compiled_classes(spark)
+            for key in keys:
+                registry[key].fn(spark, SF_DIR).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            compiled.append(_compiled_classes(spark) - before)
+    assert compiled[-1] == 0, compiled

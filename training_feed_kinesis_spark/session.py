@@ -6,6 +6,14 @@ Two entry paths exist:
     depends on must also be settable at runtime on a foreign session.
     :func:`configure` does exactly that, on a session's first table load.
 
+Static confs are the exception: they are fixed when the JVM's SparkContext
+starts, and ``conf.set`` on a running session raises
+``CANNOT_MODIFY_STATIC_CONFIG``. The codegen class-cache size
+(``spark.sql.codegen.cache.maxEntries``) is one, so it holds only for
+sessions built by :func:`build_session`; a foreign session, such as the
+driver's, keeps its own size. It is a perf knob only — the cache is keyed
+on the generated source, so results and plans never depend on it.
+
 Scale posture (SURVEY.md §4): AQE on (skew-join split, shuffle coalescing,
 runtime join re-planning), broadcast threshold generous for star-schema dims,
 shuffle partitions sized for the local harness — on a real 1000-executor
@@ -54,7 +62,12 @@ def configure(spark: SparkSession) -> SparkSession:
     session, once per Python session object: the object is marked, the
     way ``tables.parallelize`` marks frames, so every later table load
     skips the six py4j ``conf.set`` calls. A ``newSession()`` is a new
-    object and is configured on its first load."""
+    object and is configured on its first load.
+
+    Only runtime confs can be applied here. Static confs set by
+    :func:`build_session`, such as the codegen class-cache size, cannot be
+    changed on a running session (``CANNOT_MODIFY_STATIC_CONFIG``), so a
+    foreign session keeps its own."""
     if getattr(spark, "_tfk_configured", False):
         return spark
     with _CONF_LOCK:
@@ -105,6 +118,16 @@ def build_session(app_name: str = "training-feed-kinesis-spark") -> SparkSession
             "spark.sql.shuffle.partitions",
             os.environ.get("TFK_SHUFFLE_PARTITIONS", str(max(int(cpus) // 2, 8))),
         )
+        # Compiled generated classes are kept in an LRU keyed on the exact
+        # generated source; Spark's default holds 100 of them. Measured
+        # working sets (CodegenMetrics): the five perfbench batch_headline
+        # keys compile ~140 distinct classes, the 35 bench.py HEADLINE
+        # keys ~540 at sf0.1. At 100 every warm pass evicted and
+        # recompiled nearly all of them (~535 classes per 35-key pass),
+        # and HotSpot re-JITted each new class. 1000 holds the 35-key set
+        # with headroom. Static conf: it applies only to sessions built
+        # here, never through configure().
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
